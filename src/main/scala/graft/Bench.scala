@@ -380,7 +380,7 @@ object Bench {
           val t = timed {
             val model = SimilaritySearch.pqTrain(scaled, "embedding",
               m = 16, ksub = 32)
-            encodedP = SimilaritySearch.pqEncode(scaled, "embedding", model)
+            encodedP = SimilaritySearch.encode(scaled, "embedding", model)
               .select(col("vec_id"), col("pq_code")).persist()
             encodedP.count()
             pqModel = model
@@ -391,17 +391,17 @@ object Bench {
         walls.min
       }
       val pqSearchT = probed("x_pq_search")((1 to reps).map(_ => timed {
-        force(SimilaritySearch.pqSearch(encodedP, pqModel, "vec_id",
+        force(SimilaritySearch.quantizedSearch(encodedP, pqModel, "vec_id",
           qv, 10, refine = 16, exactSource = Some((scaled, "embedding"))))
       }))
       // IVFADC: cell-pruned ADC scan (probe nProbe of 32 cells, ADC only
       // their codes, exact refine) — should beat the plain full-corpus ADC
       // scan above by ~nCells/nProbe on the scan stage
-      val ivfpqEncoded = SimilaritySearch.pqEncode(indexedP, "embedding", pqModel)
+      val ivfpqEncoded = SimilaritySearch.encode(indexedP, "embedding", pqModel)
         .select(col("vec_id"), col("cell"), col("pq_code")).persist()
       ivfpqEncoded.count()
       val ivfpqT = probed("x_ivfpq_search")((1 to reps).map(_ => timed {
-        force(SimilaritySearch.ivfPqSearch(ivfpqEncoded, cents, pqModel,
+        force(SimilaritySearch.ivfQuantizedSearch(ivfpqEncoded, cents, pqModel,
           "vec_id", qv, 10, nProbe = 4, refine = 16,
           exactSource = Some((scaled, "embedding"))))
       }))
@@ -409,7 +409,7 @@ object Bench {
       // scored on codes in one codegen pass (vs the exact knn rows above
       // that score the full 32q x 200k grid on raw vectors)
       val knnIvfPq = probed("x_knn_ivfpq_32q")((1 to reps).map(_ => timed {
-        force(SimilaritySearch.knnJoinIvfPq(queries, ivfpqEncoded, cents,
+        force(SimilaritySearch.knnJoinIvfQuantized(queries, ivfpqEncoded, cents,
           pqModel, "vec_id", "vec_id", "embedding", k = 10, nProbe = 4,
           refine = 16, exactSource = Some((scaled, "embedding"))))
       }))
@@ -422,30 +422,29 @@ object Bench {
       var sqModel: ScalarQuantization.SqModel = null
       val sqBuild = probed("x_sq_build")(timed {
         val model = ScalarQuantization.sqTrain(scaled, "embedding")
-        sqEncodedP = ScalarQuantization.sqEncode(scaled, "embedding", model)
+        sqEncodedP = SimilaritySearch.encode(scaled, "embedding", model)
           .select(col("vec_id"), col("sq_code")).persist()
         sqEncodedP.count()
         sqModel = model
       })
       val sqSearchT = probed("x_sq_search")((1 to reps).map(_ => timed {
-        force(ScalarQuantization.sqSearch(sqEncodedP, sqModel, "vec_id",
+        force(SimilaritySearch.quantizedSearch(sqEncodedP, sqModel, "vec_id",
           qv, 10, refine = 2, exactSource = Some((scaled, "embedding"))))
       }))
       // IVF-SQ: cell-pruned FMA scan (probe nProbe of 32 cells, byte codes
       // only, shallow refine) — the scalar sibling of the IVFADC row
-      val ivfsqEncoded = ScalarQuantization
-        .sqEncode(indexedP, "embedding", sqModel)
+      val ivfsqEncoded = SimilaritySearch.encode(indexedP, "embedding", sqModel)
         .select(col("vec_id"), col("cell"), col("sq_code")).persist()
       ivfsqEncoded.count()
       val ivfsqT = probed("x_ivfsq_search")((1 to reps).map(_ => timed {
-        force(ScalarQuantization.ivfSqSearch(ivfsqEncoded, cents, sqModel,
+        force(SimilaritySearch.ivfQuantizedSearch(ivfsqEncoded, cents, sqModel,
           "vec_id", qv, 10, nProbe = 4, refine = 2,
           exactSource = Some((scaled, "embedding"))))
       }))
       // batch IVF-SQ: the 32-query retrieval with executor-side factors
       // and the shallow SQ refine (vs the PQ row's refine=16)
       val knnIvfSq = probed("x_knn_ivfsq_32q")((1 to reps).map(_ => timed {
-        force(SimilaritySearch.knnJoinIvfSq(queries, ivfsqEncoded, cents,
+        force(SimilaritySearch.knnJoinIvfQuantized(queries, ivfsqEncoded, cents,
           sqModel, "vec_id", "vec_id", "embedding", k = 10, nProbe = 4,
           refine = 2, exactSource = Some((scaled, "embedding"))))
       }))

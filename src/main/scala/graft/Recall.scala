@@ -168,20 +168,18 @@ object Recall {
       } else (null, Array.empty[Array[Float]])
     val pqModel = if (needPq) SimilaritySearch.pqTrain(corpus, "embedding",
       m = 16, ksub = 32) else null
-    val pqEncoded = if (families("pq"))
-      SimilaritySearch.pqEncode(corpus, "embedding", pqModel)
-        .select(col("vec_id"), col("pq_code")).persist() else null
-    val ivfpqEncoded = if (families("ivfadc"))
-      SimilaritySearch.pqEncode(indexed, "embedding", pqModel)
-        .select(col("vec_id"), col("cell"), col("pq_code")).persist() else null
     val sqModel = if (needSq)
       ScalarQuantization.sqTrain(corpus, "embedding") else null
-    val sqEncoded = if (families("sq"))
-      ScalarQuantization.sqEncode(corpus, "embedding", sqModel)
-        .select(col("vec_id"), col("sq_code")).persist() else null
-    val ivfsqEncoded = if (families("ivfsq"))
-      ScalarQuantization.sqEncode(indexed, "embedding", sqModel)
-        .select(col("vec_id"), col("cell"), col("sq_code")).persist() else null
+    // (pk, code) for the plain families, (pk, cell, code) for the composed
+    def encoded(family: String, base: DataFrame,
+        model: SimilaritySearch.Quantizer, cols: String*): DataFrame =
+      if (!families(family)) null
+      else SimilaritySearch.encode(base, "embedding", model)
+        .select((("vec_id" +: cols) :+ model.codeCol).map(col): _*).persist()
+    val pqEncoded = encoded("pq", corpus, pqModel)
+    val ivfpqEncoded = encoded("ivfadc", indexed, pqModel, "cell")
+    val sqEncoded = encoded("sq", corpus, sqModel)
+    val ivfsqEncoded = encoded("ivfsq", indexed, sqModel, "cell")
 
     // single-query families loop the query batch driver-side (their API is
     // the serving shape); batch families run as one job
@@ -196,18 +194,18 @@ object Recall {
         topkOf(SimilaritySearch.knnJoinIvf(queries, indexed, cents,
           "vec_id", "vec_id", "embedding", k, probe))),
       "pq" -> (() => s"pq_refine$pqRef" ->
-        perQuery(qv => SimilaritySearch.pqSearch(pqEncoded, pqModel,
+        perQuery(qv => SimilaritySearch.quantizedSearch(pqEncoded, pqModel,
           "vec_id", qv, k, refine = pqRef, exactSource = src))),
       "sq" -> (() => s"sq_refine$sqRef" ->
-        perQuery(qv => ScalarQuantization.sqSearch(sqEncoded, sqModel,
+        perQuery(qv => SimilaritySearch.quantizedSearch(sqEncoded, sqModel,
           "vec_id", qv, k, refine = sqRef, exactSource = src))),
       "ivfadc" -> (() => s"ivfadc_nprobe${probe}_refine$pqRef" ->
-        topkOf(SimilaritySearch.knnJoinIvfPq(queries, ivfpqEncoded, cents,
-          pqModel, "vec_id", "vec_id", "embedding", k, probe,
+        topkOf(SimilaritySearch.knnJoinIvfQuantized(queries, ivfpqEncoded,
+          cents, pqModel, "vec_id", "vec_id", "embedding", k, probe,
           refine = pqRef, exactSource = src))),
       "ivfsq" -> (() => s"ivfsq_nprobe${probe}_refine$sqRef" ->
-        topkOf(SimilaritySearch.knnJoinIvfSq(queries, ivfsqEncoded, cents,
-          sqModel, "vec_id", "vec_id", "embedding", k, probe,
+        topkOf(SimilaritySearch.knnJoinIvfQuantized(queries, ivfsqEncoded,
+          cents, sqModel, "vec_id", "vec_id", "embedding", k, probe,
           refine = sqRef, exactSource = src))))
       .collect { case (fam, run) if families(fam) => run() }
 

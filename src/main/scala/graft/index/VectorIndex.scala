@@ -1,9 +1,9 @@
 package graft.index
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.ml.feature.BucketedRandomProjectionLSHModel
-import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+import graft.ops.ScalarQuantization.SqModel
+import graft.ops.SimilaritySearch
+import graft.ops.SimilaritySearch.{PqModel, Quantizer}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -21,16 +21,17 @@ import org.apache.spark.storage.StorageLevel
   *   - `build` blocks until the index is usable (`_and_wait`, `NB:315`);
   *   - queries never touch the source table, only index state (`NB:384-388`).
   *
-  * Two execution modes:
+  * Execution modes:
   *   - exact: scored scan + `TakeOrderedAndProject` (per-partition top-k
   *     heaps, O(k) merge at the driver — no global sort, no shuffle);
-  *   - approx: MLlib `BucketedRandomProjectionLSH`; on unit-norm vectors
-  *     (engine invariant, `NB:209/376`) L2 buckets preserve cosine ranking.
+  *   - approximate: ONE family — IVF cells from distributed k-means
+  *     ([[buildIvf]]), optionally combined with one byte-code quantizer
+  *     ([[buildPq]] or [[buildSq]]) into IVFADC (Jégou et al. 2011 §IV).
   *
   * Scale notes (100 TB design): index state is a columnar cached projection
   * `(pk, projected cols, vector)` partitioned by pk — scoring is map-only and
   * embarrassingly parallel; the only driver traffic is k rows per partition.
-  * The LSH path turns O(N) scans into bucket lookups when N is large.
+  * IVF probing turns O(N) scans into ~nProbe/nCells of the corpus.
   */
 final class VectorIndex private (
     val name: String,
@@ -38,22 +39,19 @@ final class VectorIndex private (
     val vectorCol: String,
     val dim: Int,
     private var state: DataFrame,
-    private var lshModel: Option[BucketedRandomProjectionLSHModel],
     private var syncedVersion: Long) extends Serializable {
 
   /** IVF cell centroids when [[buildIvf]] ran; the state then carries a
     * `cell` column (internal — excluded from default search projections). */
   private var ivfCents: Option[Array[Array[Float]]] = None
 
-  /** PQ codebooks when [[buildPq]] ran; the state then carries a `pq_code`
-    * binary column (internal, like `cell`). */
-  private var pqModel: Option[graft.ops.SimilaritySearch.PqModel] = None
+  /** The byte-code quantizer set by [[buildPq]] or [[buildSq]] (the later
+    * call replaces the earlier); the state then carries the model's
+    * binary code column (`pq_code` / `sq_code` — internal, like `cell`). */
+  private var quantizer: Option[Quantizer] = None
 
-  /** SQ8 grid when [[buildSq]] ran; the state then carries a `sq_code`
-    * binary column (internal, like `cell`/`pq_code`). */
-  private var sqModel: Option[graft.ops.ScalarQuantization.SqModel] = None
-
-  private val internalCols = Set("cell", "pq_code", "sq_code")
+  private def internalCols: Set[String] =
+    Set("cell") ++ quantizer.map(_.codeCol)
 
   /** Tombstone column on change batches ([[VectorIndex.DeletedCol]]). */
   private def DeletedCol = VectorIndex.DeletedCol
@@ -65,6 +63,27 @@ final class VectorIndex private (
   def size: Long = state.count()
 
   def currentVersion: Long = syncedVersion
+
+  private def checkDim(queryVec: Array[Float]): Unit =
+    require(queryVec.length == dim, s"query dim ${queryVec.length} != $dim")
+
+  /** `[pk, cols...]` — the caller's columns, or every non-internal one. */
+  private def resultCols(columns: Seq[String]): Seq[Column] = {
+    val cols = if (columns.isEmpty) defaultCols else columns
+    (primaryKey +: cols.filterNot(_ == primaryKey)).map(col)
+  }
+
+  /** The result shape of every search mode: `[pk, cols..., score]`. */
+  private def project(hits: DataFrame, columns: Seq[String]): DataFrame =
+    hits.select(resultCols(columns) :+ col("score"): _*)
+
+  private def ivfLayout: Array[Array[Float]] = ivfCents.getOrElse(
+    throw new IllegalStateException(
+      s"index $name has no IVF layout; run buildIvf"))
+
+  private def quantizerLayout: Quantizer = quantizer.getOrElse(
+    throw new IllegalStateException(
+      s"index $name has no quantizer layout; run buildPq or buildSq"))
 
   /** Top-k search. `queryType` mirrors the reference's (declared, disabled)
     * `query_type` parameter (`NB:386-387`):
@@ -80,16 +99,13 @@ final class VectorIndex private (
   def search(queryVec: Array[Float], k: Int = 5,
       columns: Seq[String] = Seq.empty, queryType: String = "ANN",
       queryText: String = null, textCol: String = "text"): DataFrame = {
-    require(queryVec.length == dim, s"query dim ${queryVec.length} != $dim")
-    val cols = if (columns.isEmpty) defaultCols else columns
-    val ordered = (primaryKey +: cols.filterNot(_ == primaryKey)).map(col) :+ col("score")
+    checkDim(queryVec)
     queryType.toUpperCase match {
       case "ANN" =>
-        state
+        project(state
           .withColumn("score", cosineUnit(col(vectorCol), vecLit(queryVec)))
           .orderBy(desc("score"), col(primaryKey))
-          .limit(k)
-          .select(ordered: _*)
+          .limit(k), columns)
       case "HYBRID" =>
         require(queryText != null, "HYBRID search requires queryText")
         require(state.columns.contains(textCol),
@@ -99,10 +115,9 @@ final class VectorIndex private (
           .select(col("id").as(primaryKey), col("rrf").as("score"))
         // re-attach projected columns to the k fused hits — the k-row hit
         // side broadcasts, so this is a map-side join over the state scan
-        state.select((primaryKey +: cols.filterNot(_ == primaryKey)).map(col): _*)
+        project(state.select(resultCols(columns): _*)
           .join(broadcast(hits), Seq(primaryKey))
-          .orderBy(desc("score"), col(primaryKey))
-          .select(ordered: _*)
+          .orderBy(desc("score"), col(primaryKey)), columns)
       case other =>
         throw new IllegalArgumentException(
           s"queryType must be ANN or HYBRID, got $other")
@@ -125,7 +140,7 @@ final class VectorIndex private (
     * point holds >= 0.98. Pass an explicit value to override. */
   def buildIvf(nCells: Int = -1, maxIter: Int = 5,
       seed: Long = 42L): this.type = synchronized {
-    val (indexed, cents) = graft.ops.SimilaritySearch.ivfBuildKMeans(
+    val (indexed, cents) = SimilaritySearch.ivfBuildKMeans(
       state.drop("cell"), primaryKey, vectorCol, nCells, maxIter, seed)
     ivfCents = Some(cents)
     swapState(indexed)
@@ -144,13 +159,9 @@ final class VectorIndex private (
     * fraction the recall floor transfers across scales at. */
   def searchIvf(queryVec: Array[Float], k: Int = 5, nProbe: Int = -1,
       columns: Seq[String] = Seq.empty): DataFrame = {
-    require(queryVec.length == dim, s"query dim ${queryVec.length} != $dim")
-    val cents = ivfCents.getOrElse(
-      throw new IllegalStateException(s"index $name has no IVF layout; run buildIvf"))
-    val cols = if (columns.isEmpty) defaultCols else columns
-    graft.ops.SimilaritySearch.ivfSearch(state, cents, primaryKey,
-        vectorCol, queryVec, k, nProbe)
-      .select((primaryKey +: cols.filterNot(_ == primaryKey)).map(col) :+ col("score"): _*)
+    checkDim(queryVec)
+    project(SimilaritySearch.ivfSearch(state, ivfLayout, primaryKey,
+      vectorCol, queryVec, k, nProbe), columns)
   }
 
   /** IVF-routed late-interaction retrieval over a MULTI-VECTOR corpus:
@@ -161,75 +172,22 @@ final class VectorIndex private (
     * nCells` provably equals the exact group-max. */
   def searchMaxSim(queryVec: Array[Float], docCol: String, k: Int = 5,
       nProbe: Int = -1): DataFrame = {
-    require(queryVec.length == dim, s"query dim ${queryVec.length} != $dim")
-    val cents = ivfCents.getOrElse(
-      throw new IllegalStateException(s"index $name has no IVF layout; run buildIvf"))
+    checkDim(queryVec)
+    val cents = ivfLayout
     require(state.columns.contains(docCol),
       s"searchMaxSim needs doc column '$docCol' in the index state")
-    graft.ops.SimilaritySearch.maxSimSearch(state, cents, docCol,
+    SimilaritySearch.maxSimSearch(state, cents, docCol,
       vectorCol, queryVec, k, nProbe)
   }
 
   /** Attach a product-quantization layout: train codebooks on the indexed
-    * vectors ([[graft.ops.SimilaritySearch.pqTrain]]) and materialize the
-    * M-byte `pq_code` per row. [[searchPq]] then runs the compressed
-    * two-stage scan; later [[upsert]]s encode incoming rows against the
+    * vectors ([[SimilaritySearch.pqTrain]]) and materialize the M-byte
+    * `pq_code` per row. Later [[upsert]]s encode incoming rows against the
     * FIXED codebooks (standard PQ maintenance — re-run `buildPq` to refit
     * after heavy drift). */
   def buildPq(m: Int = 16, ksub: Int = 32, seed: Long = 42L): this.type =
-    synchronized {
-      val model = graft.ops.SimilaritySearch.pqTrain(
-        state, vectorCol, m = m, ksub = ksub, seed = seed)
-      pqModel = Some(model)
-      swapState(graft.ops.SimilaritySearch.pqEncode(
-        state.drop("pq_code"), vectorCol, model))
-      this
-    }
-
-  /** PQ two-stage top-k: ADC scan over the M-byte codes picks `k * refine`
-    * candidates, exact re-rank follows on just those rows — the scan
-    * working set is the code column, not the vectors. With `refine` deep
-    * enough that candidates cover the true top-k this equals exact
-    * [[search]] (spec-verified on the fixture). */
-  def searchPq(queryVec: Array[Float], k: Int = 5, refine: Int = -1,
-      columns: Seq[String] = Seq.empty): DataFrame = {
-    require(queryVec.length == dim, s"query dim ${queryVec.length} != $dim")
-    val model = pqModel.getOrElse(
-      throw new IllegalStateException(s"index $name has no PQ layout; run buildPq"))
-    val cols = if (columns.isEmpty) defaultCols else columns
-    graft.ops.SimilaritySearch.pqSearch(
-        state.select(col(primaryKey), col("pq_code")), model, primaryKey,
-        queryVec, k, refine, exactSource = Some((state, vectorCol)))
-      .select((primaryKey +: cols.filterNot(_ == primaryKey)).map(col)
-        :+ col("score"): _*)
-  }
-
-  /** IVFADC top-k — IVF cell pruning composed with the PQ ADC scan
-    * ([[graft.ops.SimilaritySearch.ivfPqSearch]]; Jégou et al. 2011 §IV).
-    * Needs BOTH [[buildIvf]] and [[buildPq]]. Probes the `nProbe` nearest
-    * cells, ADC-scans only their M-byte codes, exact re-ranks the bounded
-    * candidate set — the 100 TB serving shape: scan working set
-    * ~(nProbe/nCells)·m bytes per row. Full probe + deep refine provably
-    * equals exact [[search]] (spec-verified). The compressed-scan payoff
-    * needs a columnar state source: serve from a [[save]]d+[[VectorIndex.load]]ed
-    * index (parquet-backed cache prunes the vector column out of the ADC
-    * scan — PlanShapeSpec-guarded); an in-session build keeps state on a
-    * row-based localCheckpoint RDD, which always deserializes whole rows. */
-  def searchIvfPq(queryVec: Array[Float], k: Int = 5, nProbe: Int = -1,
-      refine: Int = -1, columns: Seq[String] = Seq.empty): DataFrame = {
-    require(queryVec.length == dim, s"query dim ${queryVec.length} != $dim")
-    val cents = ivfCents.getOrElse(
-      throw new IllegalStateException(s"index $name has no IVF layout; run buildIvf"))
-    val model = pqModel.getOrElse(
-      throw new IllegalStateException(s"index $name has no PQ layout; run buildPq"))
-    val cols = if (columns.isEmpty) defaultCols else columns
-    graft.ops.SimilaritySearch.ivfPqSearch(
-        state.select(col(primaryKey), col("cell"), col("pq_code")),
-        cents, model, primaryKey, queryVec, k, nProbe, refine,
-        exactSource = Some((state, vectorCol)))
-      .select((primaryKey +: cols.filterNot(_ == primaryKey)).map(col)
-        :+ col("score"): _*)
-  }
+    withQuantizer(SimilaritySearch.pqTrain(
+      state, vectorCol, m = m, ksub = ksub, seed = seed))
 
   /** Attach a scalar-quantization (SQ8) layout: one-pass per-dimension
     * min/max grid ([[graft.ops.ScalarQuantization.sqTrain]]) and the
@@ -238,68 +196,56 @@ final class VectorIndex private (
     * iteration); later [[upsert]]s encode incoming rows against the FIXED
     * grid (an out-of-range outlier clamps to the grid edge — re-run
     * `buildSq` when the corpus distribution drifts). */
-  def buildSq(): this.type = synchronized {
-    val model = graft.ops.ScalarQuantization.sqTrain(state, vectorCol)
-    sqModel = Some(model)
-    swapState(graft.ops.ScalarQuantization.sqEncode(
-      state.drop("sq_code"), vectorCol, model))
+  def buildSq(): this.type =
+    withQuantizer(graft.ops.ScalarQuantization.sqTrain(state, vectorCol))
+
+  /** Install `train`'s model as THE quantizer: the previous model's code
+    * column leaves the state, the new one is encoded for every row. */
+  private def withQuantizer(train: => Quantizer): this.type = synchronized {
+    val model = train
+    val stale = quantizer.map(_.codeCol).toSeq :+ model.codeCol
+    quantizer = Some(model)
+    swapState(SimilaritySearch.encode(state.drop(stale: _*), vectorCol, model))
     this
   }
 
-  /** SQ8 two-stage top-k: fused-multiply-add ADC scan over the dim-byte
-    * codes picks `k * refine` candidates, exact re-rank follows. SQ8's
-    * distortion is low enough that `refine = 2` recovers exact [[search]]
-    * on the fixture (spec-verified) where PQ needs 16. */
-  def searchSq(queryVec: Array[Float], k: Int = 5, refine: Int = -1,
+  /** Quantized two-stage top-k: ADC scan over the byte codes picks
+    * `k * refine` candidates, exact re-rank follows on just those rows —
+    * the scan working set is the code column, not the vectors.
+    * `refine = -1` resolves to the quantizer's certified depth (PQ 16,
+    * SQ8 2), where the result equals exact [[search]] (spec-verified on
+    * the fixture). */
+  def searchQuantized(queryVec: Array[Float], k: Int = 5, refine: Int = -1,
       columns: Seq[String] = Seq.empty): DataFrame = {
-    require(queryVec.length == dim, s"query dim ${queryVec.length} != $dim")
-    val model = sqModel.getOrElse(
-      throw new IllegalStateException(s"index $name has no SQ layout; run buildSq"))
-    val cols = if (columns.isEmpty) defaultCols else columns
-    graft.ops.ScalarQuantization.sqSearch(
-        state.select(col(primaryKey), col("sq_code")), model, primaryKey,
-        queryVec, k, refine, exactSource = Some((state, vectorCol)))
-      .select((primaryKey +: cols.filterNot(_ == primaryKey)).map(col)
-        :+ col("score"): _*)
+    checkDim(queryVec)
+    val model = quantizerLayout
+    project(SimilaritySearch.quantizedSearch(
+      state.select(col(primaryKey), col(model.codeCol)), model, primaryKey,
+      queryVec, k, refine, exactSource = Some((state, vectorCol))), columns)
   }
 
-  /** IVF-SQ top-k — IVF cell pruning composed with the SQ8 FMA scan
-    * ([[graft.ops.ScalarQuantization.ivfSqSearch]]). Needs BOTH
-    * [[buildIvf]] and [[buildSq]]. The scalar sibling of [[searchIvfPq]]:
-    * dim bytes per scanned row instead of m, but near-lossless, so the
-    * default `refine = 2` recovers exact [[search]] where PQ needs 16
-    * (spec-verified; q87 oracles the composition). Same columnar-source
-    * caveat as [[searchIvfPq]]: the compressed-scan payoff needs a
-    * [[save]]d+[[VectorIndex.load]]ed index. */
-  def searchIvfSq(queryVec: Array[Float], k: Int = 5, nProbe: Int = -1,
-      refine: Int = -1, columns: Seq[String] = Seq.empty): DataFrame = {
-    require(queryVec.length == dim, s"query dim ${queryVec.length} != $dim")
-    val cents = ivfCents.getOrElse(
-      throw new IllegalStateException(s"index $name has no IVF layout; run buildIvf"))
-    val model = sqModel.getOrElse(
-      throw new IllegalStateException(s"index $name has no SQ layout; run buildSq"))
-    val cols = if (columns.isEmpty) defaultCols else columns
-    graft.ops.ScalarQuantization.ivfSqSearch(
-        state.select(col(primaryKey), col("cell"), col("sq_code")),
-        cents, model, primaryKey, queryVec, k, nProbe, refine,
-        exactSource = Some((state, vectorCol)))
-      .select((primaryKey +: cols.filterNot(_ == primaryKey)).map(col)
-        :+ col("score"): _*)
-  }
-
-  /** Approximate top-k via LSH bucket probing. */
-  def searchApprox(queryVec: Array[Float], k: Int = 5,
+  /** IVFADC top-k — IVF cell pruning composed with the quantized ADC scan
+    * ([[SimilaritySearch.ivfQuantizedSearch]]; Jégou et al. 2011 §IV).
+    * Needs [[buildIvf]] AND a quantizer ([[buildPq]] or [[buildSq]]).
+    * Probes the `nProbe` nearest cells, ADC-scans only their codes, exact
+    * re-ranks the bounded candidate set — the 100 TB serving shape: scan
+    * working set ~(nProbe/nCells)·code bytes per row. Full probe +
+    * certified refine provably equals exact [[search]] (spec-verified).
+    * The compressed-scan payoff needs a columnar state source: serve from
+    * a [[save]]d+[[VectorIndex.load]]ed index (parquet-backed cache
+    * prunes the vector column out of the ADC scan — PlanShapeSpec-guarded);
+    * an in-session build keeps state on a row-based localCheckpoint RDD,
+    * which always deserializes whole rows. */
+  def searchIvfQuantized(queryVec: Array[Float], k: Int = 5,
+      nProbe: Int = -1, refine: Int = -1,
       columns: Seq[String] = Seq.empty): DataFrame = {
-    val model = lshModel.getOrElse(
-      throw new IllegalStateException(s"index $name built without LSH"))
-    val withVec = state.withColumn("__vec", array_to_vector(
-      transform(col(vectorCol), x => x.cast("double"))))
-    val q = org.apache.spark.ml.linalg.Vectors.dense(queryVec.map(_.toDouble))
-    val hits = model.approxNearestNeighbors(withVec, q, k).toDF()
-    val cols = if (columns.isEmpty) defaultCols else columns
-    hits
-      .withColumn("score", lit(1.0) - pow(col("distCol"), 2) / 2.0) // unit vecs: cos = 1 - d^2/2
-      .select((primaryKey +: cols.filterNot(_ == primaryKey)).map(col) :+ col("score"): _*)
+    checkDim(queryVec)
+    val cents = ivfLayout
+    val model = quantizerLayout
+    project(SimilaritySearch.ivfQuantizedSearch(
+      state.select(col(primaryKey), col("cell"), col(model.codeCol)),
+      cents, model, primaryKey, queryVec, k, nProbe, refine,
+      exactSource = Some((state, vectorCol))), columns)
   }
 
   /** Positional rows `[pk, cols..., score]` — parity with the reference's
@@ -317,17 +263,13 @@ final class VectorIndex private (
     * leaves the index on the same incremental pass that would have
     * upserted it, instead of serving stale until a full rebuild. */
   def refresh(source: DataFrame): this.type = synchronized {
-    val hasVersion = source.columns.contains("version")
-    // the source never carries the internal `cell`/`pq_code` columns — full
-    // rebuilds re-assign them against the fixed centroids/codebooks; the
+    // the source never carries the internal `cell`/code columns — full
+    // rebuilds re-assign them against the fixed centroids/quantizer; the
     // upsert path assigns per incoming batch
     val srcCols = state.columns.filterNot(internalCols).toSeq
-    if (!hasVersion) {
-      val live =
-        if (source.columns.contains(DeletedCol)) source.filter(!col(DeletedCol))
-        else source
-      val base = live.select(srcCols.map(col): _*)
-      swapState(withLayoutCols(base))
+    if (!source.columns.contains("version")) {
+      swapState(withLayoutCols(
+        VectorIndex.live(source).select(srcCols.map(col): _*)))
     } else {
       // upsert only rows changed since the watermark (version kept so
       // upsert picks the latest row per pk; the tombstone flag kept so
@@ -336,7 +278,8 @@ final class VectorIndex private (
         srcCols :+ "version" :+ DeletedCol else srcCols :+ "version"
       upsert(source.filter(col("version") > syncedVersion)
         .select(carried.distinct.map(col): _*))
-      syncedVersion = source.agg(max(col("version"))).head().getLong(0)
+      // an empty feed has no max: nothing new, the watermark stays
+      VectorIndex.maxVersion(source).foreach(syncedVersion = _)
     }
     this
   }
@@ -360,61 +303,50 @@ final class VectorIndex private (
           .filter(col("__rn") === 1)
       } else changed.dropDuplicates(primaryKey)
     // tombstones participate in the anti-join (every changed pk leaves the
-    // old state) but not in the union (deleted pks are not re-added)
-    val live = if (latest.columns.contains(DeletedCol))
-      latest.filter(!coalesce(col(DeletedCol), lit(false))) else latest
-    // IVF/PQ maintenance: incoming rows get cell + code assigned against
-    // the FIXED centroids/codebooks (re-run buildIvf/buildPq to refit
-    // after heavy drift)
-    val c = withLayoutCols(live).select(stateCols.map(col): _*)
+    // old state) but not in the union (deleted pks are not re-added).
+    // IVF/quantizer maintenance: incoming rows get cell + code assigned
+    // against the FIXED centroids/model (re-run buildIvf/buildPq/buildSq
+    // to refit after heavy drift)
+    val c = withLayoutCols(VectorIndex.live(latest))
+      .select(stateCols.map(col): _*)
     swapState(
       state.join(latest.select(primaryKey), Seq(primaryKey), "left_anti")
         .unionByName(c))
     this
   }
 
-  /** Persist index state as parquet AND the fitted LSH model when present
-    * (the service's durable index analog); reload with [[VectorIndex.load]].
-    * Persisting the model matters: a refit would draw a fresh random hash
-    * family and silently change `searchApprox` results across the
-    * save/load cycle — the reference's durable service index never does
-    * that. */
+  /** Persist index state as parquet together with the fitted layout —
+    * IVF centroids and the quantizer (the service's durable index
+    * analog); reload with [[VectorIndex.load]]. Persisting the models
+    * matters: a refit would re-randomize the Lloyd init (and the SQ grid
+    * must travel with the codes it produced, since a future source may
+    * be a subset/superset of this state), silently changing search
+    * results across the save/load cycle — the reference's durable
+    * service index never does that. */
   def save(path: String): Unit = {
+    val spark = state.sparkSession
+    import spark.implicits._
     state.write.mode("overwrite").parquet(s"$path/state")
-    lshModel.foreach(_.write.overwrite().save(s"$path/lsh"))
-    // IVF centroids persist with the index (same durability contract as
-    // the LSH model: reload must NOT change search results)
     ivfCents.foreach { cents =>
-      val spark = state.sparkSession
-      import spark.implicits._
       cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
         .toDF("cell", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/ivf")
     }
-    // PQ codebooks likewise: a refit would re-randomize the Lloyd init and
-    // silently change searchPq candidate sets across reload
-    pqModel.foreach { model =>
-      val spark = state.sparkSession
-      import spark.implicits._
-      model.codebooks.zipWithIndex.toSeq.flatMap { case (book, sub) =>
-        book.zipWithIndex.map { case (cw, k) => (sub, k, cw.toSeq) }
-      }.toDF("sub", "k", "codeword")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/pq")
-    }
-    // SQ grid: train is deterministic over the SAME corpus, but the saved
-    // state may be a subset/superset of a future source — the grid must
-    // travel with the codes it produced
-    sqModel.foreach { model =>
-      val spark = state.sparkSession
-      import spark.implicits._
-      Seq((model.mins.toSeq, model.steps.toSeq)).toDF("mins", "steps")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/sq")
+    quantizer.foreach {
+      case model: PqModel =>
+        model.codebooks.zipWithIndex.toSeq.flatMap { case (book, sub) =>
+          book.zipWithIndex.map { case (cw, k) => (sub, k, cw.toSeq) }
+        }.toDF("sub", "k", "codeword")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/pq")
+      case model: SqModel =>
+        Seq((model.mins.toSeq, model.steps.toSeq)).toDF("mins", "steps")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/sq")
     }
   }
 
   /** (Re-)derive the internal layout columns a row set is missing: IVF
-    * `cell` against the fixed centroids, PQ `pq_code` against the fixed
-    * codebooks. */
+    * `cell` against the fixed centroids, the quantizer's code against the
+    * fixed model. */
   private def withLayoutCols(df: DataFrame): DataFrame = {
     val celled = ivfCents match {
       case Some(cents) if !df.columns.contains("cell") =>
@@ -422,15 +354,10 @@ final class VectorIndex private (
           graft.expressions.VectorExpressions.nearestCentroid(col(vectorCol), cents))
       case _ => df
     }
-    val coded = pqModel match {
-      case Some(model) if !celled.columns.contains("pq_code") =>
-        graft.ops.SimilaritySearch.pqEncode(celled, vectorCol, model)
+    quantizer match {
+      case Some(model) if !celled.columns.contains(model.codeCol) =>
+        SimilaritySearch.encode(celled, vectorCol, model)
       case _ => celled
-    }
-    sqModel match {
-      case Some(model) if !coded.columns.contains("sq_code") =>
-        graft.ops.ScalarQuantization.sqEncode(coded, vectorCol, model)
-      case _ => coded
     }
   }
 
@@ -451,50 +378,54 @@ object VectorIndex {
     * index state. */
   val DeletedCol = "_deleted"
 
+  /** Rows that are not tombstones — a null [[DeletedCol]] counts as live.
+    * The one rule [[build]], [[VectorIndex.refresh]] and
+    * [[VectorIndex.upsert]] share. */
+  private def live(df: DataFrame): DataFrame =
+    if (df.columns.contains(DeletedCol))
+      df.filter(!coalesce(col(DeletedCol), lit(false)))
+    else df
+
+  /** The highest `version` in a change feed; None when the source has no
+    * version column or no rows. */
+  private def maxVersion(source: DataFrame): Option[Long] =
+    if (!source.columns.contains("version")) None
+    else {
+      val r = source.agg(max(col("version"))).head()
+      if (r.isNullAt(0)) None else Some(r.getLong(0))
+    }
+
   /** Build an index from a source table — `create_delta_sync_index_and_wait`
     * parity (`NB:315-323`): eager materialization, dimension data-derived
-    * (`NB:322`) when `dim <= 0`. */
+    * (`NB:322`) when `dim <= 0` — an empty source then needs an explicit
+    * `dim`. */
   def build(source: DataFrame, name: String, primaryKey: String,
-      vectorCol: String, dim: Int = -1, withLsh: Boolean = false,
+      vectorCol: String, dim: Int = -1,
       projected: Seq[String] = Seq.empty): VectorIndex = {
-    val src = if (source.columns.contains(DeletedCol))
-      source.filter(!coalesce(col(DeletedCol), lit(false))).drop(DeletedCol)
-    else source
+    val src = live(source).drop(DeletedCol)
     val cols = if (projected.isEmpty)
       src.columns.filterNot(_ == "version").toSeq
     else (primaryKey +: projected :+ vectorCol).distinct
     val state = src.select(cols.map(col): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val d =
-      if (dim > 0) dim
-      else state.select(size(col(vectorCol))).head().getInt(0) // NB:322
+    val d = if (dim > 0) dim else {
+      val first = state.select(size(col(vectorCol))).head(1) // NB:322
+      require(first.nonEmpty,
+        s"index $name: cannot derive dim from an empty source; pass dim > 0")
+      first.head.getInt(0)
+    }
     state.count() // _and_wait
-
-    val lsh = if (withLsh) Some(fitLsh(state, vectorCol)) else None
-
-    val version = if (source.columns.contains("version"))
-      source.agg(max(col("version"))).head().getLong(0) else 0L
-    val idx = new VectorIndex(name, primaryKey, vectorCol, d, state, lsh, version)
+    val idx = new VectorIndex(name, primaryKey, vectorCol, d, state,
+      maxVersion(source).getOrElse(0L))
     VectorIndexCatalog.register(idx)
     idx
   }
 
-  private def fitLsh(state: DataFrame,
-      vectorCol: String): BucketedRandomProjectionLSHModel = {
-    val withVec = state.withColumn("__vec", array_to_vector(
-      transform(col(vectorCol), x => x.cast("double"))))
-    new BucketedRandomProjectionLSH()
-      .setInputCol("__vec").setOutputCol("__hashes")
-      .setBucketLength(2.0).setNumHashTables(3)
-      .fit(withVec)
-  }
-
-  /** Rebuild an index from a dump written by [[VectorIndex.save]]. The
-    * persisted LSH model (same hash family -> identical `searchApprox`
-    * results) is restored when present; a legacy state-only dump falls back
-    * to a fresh fit with a warning-worthy caveat documented on `save`. */
+  /** Rebuild an index from a dump written by [[VectorIndex.save]]: the
+    * persisted centroids and quantizer are restored as saved, so the
+    * reloaded index answers identically. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String, name: String,
-      primaryKey: String, vectorCol: String, withLsh: Boolean = false): VectorIndex = {
+      primaryKey: String, vectorCol: String): VectorIndex = {
     val hconf = spark.sparkContext.hadoopConfiguration
     def exists(p: String) = {
       val hp = new org.apache.hadoop.fs.Path(p)
@@ -503,30 +434,23 @@ object VectorIndex {
     // legacy dumps stored the state parquet at the root
     val statePath = if (exists(s"$path/state")) s"$path/state" else path
     val idx = build(spark.read.parquet(statePath), name, primaryKey, vectorCol)
-    if (withLsh) {
-      idx.lshModel =
-        if (exists(s"$path/lsh"))
-          Some(BucketedRandomProjectionLSHModel.load(s"$path/lsh"))
-        else Some(fitLsh(idx.state, vectorCol))
-    }
     if (exists(s"$path/ivf")) {
       idx.ivfCents = Some(spark.read.parquet(s"$path/ivf")
         .orderBy("cell").collect()
         .map(_.getSeq[Float](1).toArray)) // k centroid rows only
     }
-    if (exists(s"$path/pq")) {
-      // m*ksub codeword rows only — the state already carries pq_code
-      val rows = spark.read.parquet(s"$path/pq").orderBy("sub", "k").collect()
-      idx.pqModel = Some(graft.ops.SimilaritySearch.PqModel(
-        rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map(_._2
+    // the state already carries the model's code column
+    idx.quantizer =
+      if (exists(s"$path/pq")) {
+        // m*ksub codeword rows only
+        val rows = spark.read.parquet(s"$path/pq").orderBy("sub", "k").collect()
+        Some(PqModel(rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map(_._2
           .sortBy(_.getInt(1)).map(_.getSeq[Float](2).toArray)).toArray))
-    }
-    if (exists(s"$path/sq")) {
-      val r = spark.read.parquet(s"$path/sq")
-        .select("mins", "steps").head() // one grid row
-      idx.sqModel = Some(graft.ops.ScalarQuantization.SqModel(
-        r.getSeq[Float](0).toArray, r.getSeq[Float](1).toArray))
-    }
+      } else if (exists(s"$path/sq")) {
+        val r = spark.read.parquet(s"$path/sq")
+          .select("mins", "steps").head() // one grid row
+        Some(SqModel(r.getSeq[Float](0).toArray, r.getSeq[Float](1).toArray))
+      } else None
     idx
   }
 }

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.{cosineUnit, vecLit}
+import graft.expressions.VectorExpressions
 
 /** Scalar quantization (SQ8) for the vector-search family: one byte per
   * dimension on a per-dimension [min, max] grid. The middle point on the
@@ -23,15 +23,31 @@ import graft.functions.VectorFunctions.{cosineUnit, vecLit}
   *
   * The reference's managed index (auschoi96 NB:315-323) exposes no
   * quantization knob; this is the §2.4 scale surface, same family as
-  * [[SimilaritySearch.pqTrain]].
+  * [[SimilaritySearch.pqTrain]]. Search runs through the shared
+  * [[SimilaritySearch.Quantizer]] paths; this object holds only the grid
+  * and its training.
   */
 object ScalarQuantization {
 
   /** Per-dimension grid: `code = round((x - min) / step)`, step =
     * (max - min) / 255. A constant dimension has step 0 and is lossless. */
-  case class SqModel(mins: Array[Float], steps: Array[Float]) {
+  case class SqModel(mins: Array[Float], steps: Array[Float])
+      extends SimilaritySearch.Quantizer {
     require(mins.length == steps.length, "sq model: mins/steps mismatch")
     def dim: Int = mins.length
+    def codeCol: String = "sq_code"
+    def certifiedRefine: Int = SimilaritySearch.SqRefineCertified
+    def encode(vec: Column): Column =
+      VectorExpressions.sqEncode(vec, mins, steps)
+    def adcScore(code: Column, query: Array[Float]): Column = {
+      val (scaled, bias) = queryFactors(query)
+      VectorExpressions.sqAdcDot(code, scaled, bias)
+    }
+    /** `[scaled.., bias]` per query, bit-identical to [[queryFactors]]. */
+    def queryLut(vec: Column): Column =
+      VectorExpressions.sqFactors(vec, mins, steps)
+    def adcScoreLut(code: Column, lut: Column): Column =
+      VectorExpressions.sqAdcDotLut(code, lut)
 
     /** Driver-side per-query ADC factors: `score = bias + sum scaled_i *
       * code_i` equals the dot product against the dequantized vector. */
@@ -85,70 +101,5 @@ object ScalarQuantization {
         })
     val steps = Array.tabulate(dim)(i => (maxs(i) - mins(i)) / 255f)
     SqModel(mins, steps)
-  }
-
-  /** Attach the dim-byte SQ code (`sq_code`, binary). As with PQ, the point
-    * is that a production corpus persists `(pk, sq_code)` without the raw
-    * vector. */
-  def sqEncode(corpus: DataFrame, vecCol: String, model: SqModel): DataFrame =
-    corpus.withColumn("sq_code",
-      graft.expressions.VectorExpressions.sqEncode(col(vecCol),
-        model.mins, model.steps))
-
-  /** IVF-SQ — IVF cell pruning composed with the SQ8 ADC scan, the scalar
-    * sibling of [[SimilaritySearch.ivfPqSearch]] (the Faiss
-    * `IVF<n>,SQ8` factory point on the same curve): probe the `nProbe`
-    * cells nearest the query, FMA-scan ONLY their dim-byte codes, exact
-    * re-rank the bounded candidate set. Per scanned row this reads dim
-    * bytes instead of PQ's m — less compression — but the near-lossless
-    * grid keeps `refine = 2` sufficient where PQ needs 16, so the refine
-    * stage touches 8x fewer raw vectors. At 100 TB pick by corpus width:
-    * SQ when the scan budget affords dim B/row, PQ/IVFADC below that.
-    * `nProbe >= nCells` with the default refine provably equals exact
-    * search on the fixture (spec + q87 oracle). `indexed` must carry
-    * `cell` AND `sq_code`. */
-  def ivfSqSearch(indexed: DataFrame, centroids: Array[Array[Float]],
-      model: SqModel, pk: String, query: Array[Float], k: Int,
-      nProbe: Int = -1, refine: Int = -1,
-      exactSource: Option[(DataFrame, String)] = None): DataFrame = {
-    import graft.functions.VectorFunctions.dot
-    val probeCells = centroids.indices
-      .sortBy(i => -dot(query, centroids(i)))
-      .take(SimilaritySearch.resolveProbe(nProbe, centroids.length))
-    sqSearch(
-      indexed.filter(col("cell").isin(probeCells: _*))
-        .select(col(pk), col("sq_code")),
-      model, pk, query, k, refine, exactSource)
-  }
-
-  /** Two-stage SQ search, shaped exactly like
-    * [[SimilaritySearch.pqSearch]]: (1) fused-multiply-add ADC scan over
-    * the byte codes, `TakeOrderedAndProject` keeps `k * refine`
-    * candidates; (2) exact re-rank via a broadcast pk lookup against
-    * `exactSource`. SQ8's distortion is so low that `refine = 2` already
-    * covers the true top-k in practice (spec pins equality on the
-    * fixture); `exactSource = None` returns ADC scores directly. */
-  def sqSearch(encoded: DataFrame, model: SqModel, pk: String,
-      query: Array[Float], k: Int, refine: Int = -1,
-      exactSource: Option[(DataFrame, String)] = None): DataFrame = {
-    val rf = SimilaritySearch.resolveRefine(refine,
-      SimilaritySearch.SqRefineCertified)
-    val (scaled, bias) = model.queryFactors(query)
-    val candidates = encoded
-      .withColumn("adc_score",
-        graft.expressions.VectorExpressions.sqAdcDot(col("sq_code"),
-          scaled, bias))
-      .orderBy(desc("adc_score"), col(pk))
-      .limit(k * rf)
-    exactSource match {
-      case None => candidates.drop("sq_code").limit(k)
-      case Some((source, vecCol)) =>
-        val cand = broadcast(candidates.select(col(pk)))
-        source.join(cand, pk)
-          .withColumn("score", cosineUnit(col(vecCol), vecLit(query)))
-          .orderBy(desc("score"), col(pk))
-          .limit(k)
-          .drop(vecCol)
-    }
   }
 }

@@ -167,8 +167,9 @@ object SimilaritySearch {
     * sorted pass, keep nProbe, all inside whole-stage codegen — and
     * explode to (query_id, payload..., cell) probe rows. Stateless,
     * per-row work only. `payload` carries the per-query columns that must
-    * ride to the cell join (raw query vector, executor-derived PQ LUT or
-    * SQ factors), named here so callers and this helper can't drift. */
+    * ride to the cell join (raw query vector or the executor-derived
+    * [[Quantizer.queryLut]]), named here so callers and this helper
+    * can't drift. */
   private[graft] def ivfRoute(queries: DataFrame,
       centroids: Array[Array[Float]], vecCol: String, nProbe: Int,
       qId: Column, payload: (Column, String)*): DataFrame = {
@@ -244,85 +245,49 @@ object SimilaritySearch {
   }
 
   /** Batch IVFADC — the multi-query composition of [[knnJoinIvf]] routing
-    * with the [[ivfPqSearch]] compressed scan: the full nightly-retrieval
-    * shape at 100 TB (Q queries against a corpus whose scan side is M-byte
-    * codes, touching only each query's nProbe cells).
+    * with the [[ivfQuantizedSearch]] compressed scan: the full
+    * nightly-retrieval shape at 100 TB (Q queries against a corpus whose
+    * scan side is byte codes, touching only each query's nProbe cells).
     *
     * The query side never visits the driver: only the BATCH-INDEPENDENT
-    * model state is broadcast (the m·ksub·dsub-float codebook inside
-    * [[graft.expressions.PqLut]], the nCells·dim centroid matrix as
-    * routing literals), and each query derives its own LUT and probe
-    * cells executor-side, where its row lives — a 1M-query batch costs
-    * the driver nothing. Routing stays an equi-join on `cell` against
-    * the exploded (query_id, lut, cell) relation (query side small →
-    * broadcast; huge → plain shuffle join, still fully distributed);
-    * [[graft.expressions.PqAdcDotLut]] reads each scored row's LUT from
-    * the join side, so raw vectors appear nowhere in the scan or the
-    * rank exchange. The exact re-rank re-scores each query's `k * refine`
-    * ADC candidates: corpus vectors for the bounded candidate pk set are
-    * fetched via broadcast semi-join, query vectors re-attach by a
-    * query_id join, ranked per query. With `nProbe >= nCells` and
-    * `refine` deep enough this equals exact [[knnJoin]] (spec-verified).
-    * An empty query batch yields an empty result. Result: `(query_id,
-    * cPk, score, rank)`; integral pks required (they ride exchanges as
-    * longs). */
-  def knnJoinIvfPq(queries: DataFrame, indexed: DataFrame,
-      centroids: Array[Array[Float]], model: PqModel, qPk: String,
+    * model state is broadcast (the PQ codebook or the SQ grid inside the
+    * model's [[Quantizer.queryLut]] expression, the nCells·dim centroid
+    * matrix as routing literals), and each query derives its own table
+    * and probe cells executor-side, where its row lives — a 1M-query
+    * batch costs the driver nothing. Routing stays an equi-join on `cell`
+    * against the exploded (query_id, lut, cell) relation (query side
+    * small → broadcast; huge → plain shuffle join, still fully
+    * distributed); [[Quantizer.adcScoreLut]] reads each scored row's
+    * table from the join side, so raw vectors appear nowhere in the scan
+    * or the rank exchange. The exact re-rank re-scores each query's
+    * `k * refine` ADC candidates: corpus vectors for the bounded
+    * candidate pk set are fetched via broadcast semi-join, query vectors
+    * re-attach by a query_id join, ranked per query. `refine = -1`
+    * resolves to the model's certified depth (PQ 16, SQ8 2 — the
+    * near-lossless grid reads 8x fewer raw vectors per query). With
+    * `nProbe >= nCells` and `refine` deep enough this equals exact
+    * [[knnJoin]] (spec-verified; q54/q88 oracle it). An empty query batch
+    * yields an empty result. Result: `(query_id, cPk, score, rank)`;
+    * integral pks required (they ride exchanges as longs). `indexed`
+    * must carry `cell` AND the model's code column. */
+  def knnJoinIvfQuantized(queries: DataFrame, indexed: DataFrame,
+      centroids: Array[Array[Float]], model: Quantizer, qPk: String,
       cPk: String, vecCol: String, k: Int, nProbe: Int = -1,
       refine: Int = -1,
       exactSource: Option[(DataFrame, String)] = None): DataFrame = {
     val probe = resolveProbe(nProbe, centroids.length)
-    val rf = resolveRefine(refine, PqRefineCertified)
+    val rf = resolveRefine(refine, model.certifiedRefine)
     requireIntegralPks(queries, qPk, indexed, cPk)
     val spark = indexed.sparkSession
     import spark.implicits._
-    // executor-side query prep: LUT from the broadcast codebook rides the
-    // shared routing projection
+    // executor-side query prep: the per-query table rides the shared
+    // routing projection
     val probed = ivfRoute(queries, centroids, vecCol, probe,
-      col(qPk).cast("long"),
-      graft.expressions.VectorExpressions
-        .pqLut(col(vecCol), model.codebooks) -> "__lut")
-    val scored = indexed.select(col(cPk), col("cell"), col("pq_code"))
+      col(qPk).cast("long"), model.queryLut(col(vecCol)) -> "__lut")
+    val scored = indexed.select(col(cPk), col("cell"), col(model.codeCol))
       .join(broadcastIfSmall(probed), Seq("cell"))
       .select($"query_id", col(cPk),
-        graft.expressions.VectorExpressions
-          .pqAdcDotLut(col("pq_code"), $"__lut").as("adc_score"))
-    rankRefine(scored, queries, qPk, cPk, vecCol, k, rf, exactSource)
-  }
-
-  /** Batch IVF-SQ — [[knnJoinIvfPq]]'s construction with the SQ8 FMA scan
-    * ([[graft.ops.ScalarQuantization.ivfSqSearch]]'s multi-query shape):
-    * each query derives its `[scaled.., bias]` FMA factors executor-side
-    * via [[graft.expressions.SqFactors]] (the grid — 2·dim floats,
-    * batch-independent — is the only broadcast model state), routing is
-    * the same cell equi-join, and [[graft.expressions.SqAdcDotLut]] reads
-    * each scored row's factors from the join side. Near-lossless codes
-    * certify `refine = 2` where PQ certifies 16 (`refine = -1` resolves
-    * each from [[operatingPoint]]'s depths), so the bounded re-rank
-    * reads 8x fewer raw vectors per query. `nProbe >= nCells`
-    * with that refine provably equals exact [[knnJoin]] (spec-verified;
-    * q88 oracles it). Result: `(query_id, cPk, score, rank)`; integral
-    * pks required. */
-  def knnJoinIvfSq(queries: DataFrame, indexed: DataFrame,
-      centroids: Array[Array[Float]],
-      model: graft.ops.ScalarQuantization.SqModel, qPk: String,
-      cPk: String, vecCol: String, k: Int, nProbe: Int = -1,
-      refine: Int = -1,
-      exactSource: Option[(DataFrame, String)] = None): DataFrame = {
-    val probe = resolveProbe(nProbe, centroids.length)
-    val rf = resolveRefine(refine, SqRefineCertified)
-    requireIntegralPks(queries, qPk, indexed, cPk)
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    val probed = ivfRoute(queries, centroids, vecCol, probe,
-      col(qPk).cast("long"),
-      graft.expressions.VectorExpressions
-        .sqFactors(col(vecCol), model.mins, model.steps) -> "__f")
-    val scored = indexed.select(col(cPk), col("cell"), col("sq_code"))
-      .join(broadcastIfSmall(probed), Seq("cell"))
-      .select($"query_id", col(cPk),
-        graft.expressions.VectorExpressions
-          .sqAdcDotLut(col("sq_code"), $"__f").as("adc_score"))
+        model.adcScoreLut(col(model.codeCol), $"__lut").as("adc_score"))
     rankRefine(scored, queries, qPk, cPk, vecCol, k, rf, exactSource)
   }
 
@@ -431,39 +396,6 @@ object SimilaritySearch {
       .withColumn("score", cosineUnit($"__qv", $"__cv"))
       .filter($"score" >= minScore)
       .select($"query_id", $"__cid".as(cPk), $"score")
-  }
-
-  /** IVF (inverted-file) index: kmeans-lite centroids computed from a
-    * sample, every corpus row assigned to its nearest centroid. Search
-    * probes only `nProbe` closest centroid cells — at 100 TB this is the
-    * difference between scanning the corpus and scanning ~nProbe/nCells of
-    * it. Returns the corpus with a `cell` column, plus the centroids. */
-  def ivfBuild(corpus: DataFrame, pk: String, vecCol: String,
-      nCells: Int = 16, seed: Long = 42L): (DataFrame, Array[Array[Float]]) = {
-    // centroid init: deterministic sample, then one Lloyd step executor-side
-    val sample = corpus.select(col(vecCol)).orderBy(xxhash64(col(pk), lit(seed)))
-      .limit(nCells * 8).collect().map(_.getSeq[Float](0).toArray)
-    require(sample.nonEmpty, "ivfBuild: empty corpus")
-    // a corpus smaller than nCells gets one cell per row, not an exception
-    val cells = math.min(nCells, sample.length)
-    val init = sample.take(cells)
-    val assigned = sample.map { v =>
-      (init.indices.minBy(i => -dot(v, init(i))), v)
-    }
-    val centroids = assigned.groupBy(_._1).map { case (c, vs) =>
-      val dim = vs.head._2.length
-      val acc = new Array[Float](dim)
-      vs.foreach { case (_, v) => var i = 0; while (i < dim) { acc(i) += v(i); i += 1 } }
-      var i = 0
-      while (i < dim) { acc(i) /= vs.length; i += 1 }
-      c -> l2Normalize(acc)
-    }
-    val cents = (0 until cells).map(i => centroids.getOrElse(i, init(i))).toArray
-    // codegen'd argmax over the centroid matrix (one loop per row; the
-    // struct-array + sort_array formulation was interpreted per row)
-    val indexed = corpus.withColumn("cell",
-      graft.expressions.VectorExpressions.nearestCentroid(col(vecCol), cents))
-    (indexed, cents)
   }
 
   /** IVF with distributed KMeans (Lloyd) centroids — the principled build
@@ -624,7 +556,7 @@ object SimilaritySearch {
       // spherical k-means step: corpus vectors are unit-norm (engine
       // invariant, NB:209/376), so centroids are re-normalized each round
       // and the dot-argmax is a true cosine argmax. Empty cells keep
-      // their previous centroid (same policy as ivfBuild).
+      // their previous centroid.
       moved = 0.0
       (0 until cells).foreach { c =>
         if (counts(c) > 0) {
@@ -644,15 +576,51 @@ object SimilaritySearch {
     (indexed, cents)
   }
 
+  /** A byte-code quantizer for the compressed scan — the "codes" half of
+    * IVFADC (Jégou et al. 2011 §IV). [[PqModel]] (m bytes/row) and
+    * [[ScalarQuantization.SqModel]] (dim bytes/row) are its two points on
+    * the compression/recall curve; every quantized search path
+    * ([[quantizedSearch]], [[ivfQuantizedSearch]], [[knnJoinIvfQuantized]])
+    * is written once against this interface. */
+  trait Quantizer extends Serializable {
+    /** The code column [[SimilaritySearch.encode]] attaches (`pq_code` /
+      * `sq_code`). */
+    def codeCol: String
+    /** Exact-rescore depth a `refine = -1` resolves to
+      * ([[PqRefineCertified]] / [[SqRefineCertified]]). */
+    def certifiedRefine: Int
+    /** Vector column -> byte code. */
+    def encode(vec: Column): Column
+    /** Single-query ADC score over the codes; the query-side table is
+      * computed once on the driver and embedded in the expression. */
+    def adcScore(code: Column, query: Array[Float]): Column
+    /** The per-query table as an expression over a query-vector column,
+      * evaluated on executors (batch paths: no per-query driver state). */
+    def queryLut(vec: Column): Column
+    /** ADC score reading each row's table from a [[queryLut]] column. */
+    def adcScoreLut(code: Column, lut: Column): Column
+  }
+
   /** Product-quantization model: `codebooks(m)(k)` is the k-th codeword of
     * subspace m (Jégou et al. 2011, "Product Quantization for Nearest
     * Neighbor Search"). A D-dim float vector encodes to `m` bytes — at
     * 100 TB of 768-dim embeddings (~3 TB of raw vectors per billion rows)
     * the 96-byte codes keep the scan working set ~32x smaller, and the
     * ADC scan never decompresses. */
-  case class PqModel(codebooks: Array[Array[Array[Float]]]) {
+  case class PqModel(codebooks: Array[Array[Array[Float]]])
+      extends Quantizer {
+    import graft.expressions.VectorExpressions
     def m: Int = codebooks.length
     def dim: Int = codebooks.map(_(0).length).sum
+    def codeCol: String = "pq_code"
+    def certifiedRefine: Int = PqRefineCertified
+    def encode(vec: Column): Column =
+      VectorExpressions.pqEncode(vec, codebooks)
+    def adcScore(code: Column, query: Array[Float]): Column =
+      VectorExpressions.pqAdcDot(code, lut(query))
+    def queryLut(vec: Column): Column = VectorExpressions.pqLut(vec, codebooks)
+    def adcScoreLut(code: Column, lut: Column): Column =
+      VectorExpressions.pqAdcDotLut(code, lut)
 
     /** Query-side lookup table: `lut(m)(k) = dot(query_m, codebook(m)(k))`
       * — computed ONCE per query on the driver (m*ksub*dsub flops), then
@@ -771,33 +739,32 @@ object SimilaritySearch {
     PqModel(books)
   }
 
-  /** Attach the M-byte PQ code (`pq_code`, binary). A production corpus
-    * persists `(pk, pq_code)` WITHOUT the raw vector — that is the point. */
-  def pqEncode(corpus: DataFrame, vecCol: String, model: PqModel): DataFrame =
-    corpus.withColumn("pq_code",
-      graft.expressions.VectorExpressions.pqEncode(col(vecCol),
-        model.codebooks))
+  /** Attach the model's byte code column ([[Quantizer.codeCol]]). A
+    * production corpus persists `(pk, code)` WITHOUT the raw vector — that
+    * is the point. */
+  def encode(corpus: DataFrame, vecCol: String, model: Quantizer): DataFrame =
+    corpus.withColumn(model.codeCol, model.encode(col(vecCol)))
 
-  /** Two-stage PQ search: (1) ADC scan over the M-byte codes — map-only,
-    * `TakeOrderedAndProject` keeps `k * refine` candidates; (2) exact
-    * re-rank — the candidate pk set (bounded, driver-safe) joins back to
-    * `exactSource` as a BROADCAST pk lookup, so the refine stage reads
-    * `k * refine` raw vectors, never the corpus. With `refine` large enough
-    * that candidates cover the true top-k, the result EQUALS exact search
-    * (spec-verified; q44 oracles it against the q11 SQL). `exactSource =
-    * None` skips the re-rank and returns ADC scores directly. */
-  def pqSearch(encoded: DataFrame, model: PqModel, pk: String,
+  /** Two-stage quantized search: (1) ADC scan over the byte codes —
+    * map-only, `TakeOrderedAndProject` keeps `k * refine` candidates;
+    * (2) exact re-rank — the candidate pk set (bounded, driver-safe) joins
+    * back to `exactSource` as a BROADCAST pk lookup, so the refine stage
+    * reads `k * refine` raw vectors, never the corpus. `refine = -1`
+    * resolves to the model's certified depth: PQ needs 16, while SQ8's
+    * near-lossless grid already covers the true top-k at 2. With `refine`
+    * deep enough the result EQUALS exact search (spec-verified; q44/q59
+    * oracle it against the q11 SQL). `exactSource = None` skips the
+    * re-rank and returns ADC scores directly. */
+  def quantizedSearch(encoded: DataFrame, model: Quantizer, pk: String,
       query: Array[Float], k: Int, refine: Int = -1,
       exactSource: Option[(DataFrame, String)] = None): DataFrame = {
-    val rf = resolveRefine(refine, PqRefineCertified)
-    val lut = model.lut(query)
+    val rf = resolveRefine(refine, model.certifiedRefine)
     val candidates = encoded
-      .withColumn("adc_score",
-        graft.expressions.VectorExpressions.pqAdcDot(col("pq_code"), lut))
+      .withColumn("adc_score", model.adcScore(col(model.codeCol), query))
       .orderBy(desc("adc_score"), col(pk))
       .limit(k * rf)
     exactSource match {
-      case None => candidates.drop("pq_code").limit(k)
+      case None => candidates.drop(model.codeCol).limit(k)
       case Some((source, vecCol)) =>
         val cand = broadcast(candidates.select(col(pk)))
         source.join(cand, pk)
@@ -808,46 +775,50 @@ object SimilaritySearch {
     }
   }
 
-  /** IVFADC — IVF cell pruning composed with the PQ ADC scan (Jégou et al.
-    * 2011 §IV, the Faiss IVFADC structure; the reference's managed Vector
-    * Search index, `NB:315-323`, is precisely such a composed ANN index).
-    * Three stages, each touching strictly less data than the last:
+  /** IVFADC — IVF cell pruning composed with the quantized ADC scan
+    * (Jégou et al. 2011 §IV, the Faiss `IVF<n>,PQ<m>` / `IVF<n>,SQ8`
+    * structures; the reference's managed Vector Search index,
+    * `NB:315-323`, is precisely such a composed ANN index). Three stages,
+    * each touching strictly less data than the last:
     *   1. probe — rank the k·dim centroid matrix driver-side, keep the
     *      `nProbe` cells nearest the query (no cluster work at all);
-    *   2. ADC — scan ONLY the probed cells' M-byte codes with the
-    *      broadcast query LUT (~nProbe/nCells of the corpus, 16 B/row at
-    *      m=16 instead of dim·4 B raw), `TakeOrderedAndProject` keeps
-    *      `k * refine` candidates;
+    *   2. ADC — scan ONLY the probed cells' codes with the query table
+    *      (~nProbe/nCells of the corpus, m or dim bytes/row instead of
+    *      dim·4 B raw), `TakeOrderedAndProject` keeps `k * refine`
+    *      candidates;
     *   3. refine — exact re-rank of the bounded candidate set via a
     *      broadcast pk lookup against `exactSource` (reads k·refine raw
     *      vectors, never the corpus).
     * At 100 TB this is THE ANN serving shape: the scan working set is
-    * (nProbe/nCells)·m bytes per row and everything else is bounded.
+    * (nProbe/nCells)·code bytes per row and everything else is bounded.
     * `nProbe >= nCells` with `refine` deep enough provably equals exact
-    * search (spec-verified; q51 oracles the composition against q11's
-    * plain SQL). `indexed` must carry `cell` AND `pq_code`. */
-  def ivfPqSearch(indexed: DataFrame, centroids: Array[Array[Float]],
-      model: PqModel, pk: String, query: Array[Float], k: Int,
+    * search (spec-verified; q51/q87 oracle the composition against q11's
+    * plain SQL). `indexed` must carry `cell` AND the model's code
+    * column. */
+  def ivfQuantizedSearch(indexed: DataFrame, centroids: Array[Array[Float]],
+      model: Quantizer, pk: String, query: Array[Float], k: Int,
       nProbe: Int = -1, refine: Int = -1,
-      exactSource: Option[(DataFrame, String)] = None): DataFrame = {
-    val probeCells = centroids.indices
-      .sortBy(i => -dot(query, centroids(i)))
-      .take(resolveProbe(nProbe, centroids.length))
-    pqSearch(
-      indexed.filter(col("cell").isin(probeCells: _*))
-        .select(col(pk), col("pq_code")),
+      exactSource: Option[(DataFrame, String)] = None): DataFrame =
+    quantizedSearch(
+      indexed.filter(col("cell").isin(probeCells(query, centroids,
+          resolveProbe(nProbe, centroids.length)): _*))
+        .select(col(pk), col(model.codeCol)),
       model, pk, query, k, refine, exactSource)
-  }
+
+  /** The `nProbe` cells whose centroids score highest against the query —
+    * the driver-side probe ranking every single-query IVF path shares. */
+  private def probeCells(query: Array[Float],
+      centroids: Array[Array[Float]], nProbe: Int): Seq[Int] =
+    centroids.indices.sortBy(i => -dot(query, centroids(i))).take(nProbe)
 
   /** IVF probe: score only rows in the `nProbe` cells closest to the query.
     * Cell pruning happens before any vector math touches the corpus. */
   def ivfSearch(indexed: DataFrame, centroids: Array[Array[Float]],
       pk: String, vecCol: String, query: Array[Float], k: Int,
       nProbe: Int = -1): DataFrame = {
-    val probeCells = centroids.indices
-      .sortBy(i => -dot(query, centroids(i)))
-      .take(resolveProbe(nProbe, centroids.length))
-    indexed.filter(col("cell").isin(probeCells: _*))
+    val cells = probeCells(query, centroids,
+      resolveProbe(nProbe, centroids.length))
+    indexed.filter(col("cell").isin(cells: _*))
       .withColumn("score", cosineUnit(col(vecCol), vecLit(query)))
       .orderBy(desc("score"), col(pk))
       .limit(k)
@@ -871,11 +842,9 @@ object SimilaritySearch {
   def maxSimSearch(indexed: DataFrame, centroids: Array[Array[Float]],
       docCol: String, vecCol: String, query: Array[Float], k: Int,
       nProbe: Int = -1): DataFrame = {
-    val probe =
-      if (nProbe > 0) nProbe else maxSimProbeFor(centroids.length)
-    val probeCells = centroids.indices
-      .sortBy(i => -dot(query, centroids(i))).take(probe)
-    indexed.filter(col("cell").isin(probeCells: _*))
+    val cells = probeCells(query, centroids,
+      if (nProbe > 0) nProbe else maxSimProbeFor(centroids.length))
+    indexed.filter(col("cell").isin(cells: _*))
       .withColumn("score", cosineUnit(col(vecCol), vecLit(query)))
       .groupBy(col(docCol))
       .agg(max(col("score")).as("score"))
@@ -930,11 +899,11 @@ object SimilaritySearch {
   /** The certified exact-rescore depths — [[operatingPoint]]'s refine
     * fields for ANY n (resolution properties of the quantizer family, not
     * corpus-size ones; measured in RECALL_sf1). These are the single
-    * source of truth behind every PQ/SQ serving surface's `refine = -1`
-    * default: round 11 shipped `knnJoinIvfPq` defaulting to half the
-    * certified PQ depth while `searchIvfPq` used the full one — a
-    * default-driven batch retrieval refined at a depth no recall artifact
-    * covered. */
+    * source of truth behind every quantized serving surface's
+    * `refine = -1` default (through [[Quantizer.certifiedRefine]]): round
+    * 11 shipped the batch PQ join defaulting to half the certified depth
+    * while the single-query path used the full one — a default-driven
+    * batch retrieval refined at a depth no recall artifact covered. */
   val PqRefineCertified = 16
   val SqRefineCertified = 2
 
@@ -966,9 +935,9 @@ object SimilaritySearch {
   }
 
   /** Resolve a caller's refine argument: explicit positive values pass
-    * through; the `-1` sentinel (every PQ/SQ `refine` default since
+    * through; the `-1` sentinel (every quantized `refine` default since
     * round 12) resolves to the certified depth for the quantizer family
-    * ([[PqRefineCertified]]/[[SqRefineCertified]]) — the same
+    * ([[Quantizer.certifiedRefine]]) — the same
     * no-constant-defaults rule as [[resolveProbe]], so "unspecified" can
     * never mean a depth the recall artifact doesn't cover. */
   private[graft] def resolveRefine(refine: Int, certified: Int): Int = {

@@ -635,9 +635,9 @@ object GraftQueries {
     val qv = e.filter(col("vec_id") === 0).select(col("embedding"))
       .head().getSeq[Float](0).toArray
     val model = SimilaritySearch.pqTrain(e, "embedding", m = 16, ksub = 32)
-    val encoded = SimilaritySearch.pqEncode(e, "embedding", model)
+    val encoded = SimilaritySearch.encode(e, "embedding", model)
       .select(col("vec_id"), col("pq_code"))
-    SimilaritySearch.pqSearch(encoded, model, "vec_id", qv, k = 10,
+    SimilaritySearch.quantizedSearch(encoded, model, "vec_id", qv, k = 10,
         refine = 16, exactSource = Some((e, "embedding")))
       .select(col("vec_id"), col("score"))
   }
@@ -725,8 +725,9 @@ object GraftQueries {
         sum(col("o_totalprice")).cast("float").as("total"))
   }
 
-  /** IVFADC composed search ([[SimilaritySearch.ivfPqSearch]], Jégou §IV):
-    * IVF cell pruning feeding the PQ ADC scan, exact re-rank last — the
+  /** IVFADC composed search ([[SimilaritySearch.ivfQuantizedSearch]] with
+    * a PQ model, Jégou §IV): IVF cell pruning feeding the PQ ADC scan,
+    * exact re-rank last — the
     * true 100 TB ANN serving path, exercised end to end (distributed
     * KMeans centroids, codegen cell assignment + PQ encode, cell-filtered
     * ADC scan, broadcast refine). Full probe + deep refine provably equals
@@ -740,9 +741,9 @@ object GraftQueries {
     val (indexed, cents) = SimilaritySearch.ivfBuildKMeans(e, "vec_id",
       "embedding", nCells = 8)
     val model = SimilaritySearch.pqTrain(e, "embedding", m = 16, ksub = 32)
-    val encoded = SimilaritySearch.pqEncode(indexed, "embedding", model)
+    val encoded = SimilaritySearch.encode(indexed, "embedding", model)
       .select(col("vec_id"), col("cell"), col("pq_code"))
-    SimilaritySearch.ivfPqSearch(encoded, cents, model, "vec_id", qv,
+    SimilaritySearch.ivfQuantizedSearch(encoded, cents, model, "vec_id", qv,
         k = 10, nProbe = 8, refine = 16, exactSource = Some((e, "embedding")))
       .select(col("vec_id"), col("score"))
   }
@@ -791,42 +792,43 @@ object GraftQueries {
         sum(col("o_totalprice")).cast("float").as("total"))
   }
 
-  /** Batch IVFADC retrieval ([[SimilaritySearch.knnJoinIvfPq]]): Q queries
-    * routed to their cells AND scored on PQ codes in one codegen pass,
+  /** Batch IVFADC retrieval ([[SimilaritySearch.knnJoinIvfQuantized]] with
+    * a PQ model): Q queries routed to their cells AND scored on PQ codes
+    * in one codegen pass,
     * exact re-rank last — the multi-query composition of q51's serving
     * path. Full probe + deep refine provably equals the exact kNN join,
-    * so the whole batch machinery (routing, per-row LUT selection via
-    * `PqAdcDotMulti`, bounded refine) hash-checks against q12b's plain
-    * SQL. Pruned probe is benchmarked as `x_knn_ivfpq_32q`. */
+    * so the whole batch machinery (routing, executor-side LUTs via
+    * `PqLut`/`PqAdcDotLut`, bounded refine) hash-checks against q12b's
+    * plain SQL. Pruned probe is benchmarked as `x_knn_ivfpq_32q`. */
   def q54BatchIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
     val (indexed, cents) = SimilaritySearch.ivfBuildKMeans(e, "vec_id",
       "embedding", nCells = 8)
     val model = SimilaritySearch.pqTrain(e, "embedding", m = 16, ksub = 32)
-    val encoded = SimilaritySearch.pqEncode(indexed, "embedding", model)
+    val encoded = SimilaritySearch.encode(indexed, "embedding", model)
       .select(col("vec_id"), col("cell"), col("pq_code"))
-    SimilaritySearch.knnJoinIvfPq(e.filter(col("vec_id") < 5), encoded,
+    SimilaritySearch.knnJoinIvfQuantized(e.filter(col("vec_id") < 5), encoded,
         cents, model, "vec_id", "vec_id", "embedding", k = 3, nProbe = 8,
         refine = 48, exactSource = Some((e, "embedding")))
       .select(col("query_id"), col("vec_id"), col("score"),
         col("rank").cast("long").as("rnk"))
   }
 
-  /** Batch IVF-SQ retrieval ([[SimilaritySearch.knnJoinIvfSq]]): q54's
-    * construction with the SQ8 FMA scan — each query derives its
-    * `[scaled.., bias]` factors executor-side (`SqFactors`), routes by
-    * the cell equi-join, scores codes via `SqAdcDotLut`, and exact
-    * re-ranks at the SQ default refine=2 (vs the PQ twin's 48). Full
-    * probe + that refine provably equals the exact kNN join, so the
-    * batch machinery hash-checks against q54's plain SQL. */
+  /** Batch IVF-SQ retrieval ([[SimilaritySearch.knnJoinIvfQuantized]] with an
+    * SQ8 model): q54's construction with the SQ8 FMA scan — each query derives
+    * its `[scaled.., bias]` factors executor-side (`SqFactors`), routes by the
+    * cell equi-join, scores codes via `SqAdcDotLut`, and exact re-ranks at the
+    * SQ default refine=2 (vs the PQ twin's 48). Full probe + that refine
+    * provably equals the exact kNN join, so the batch machinery hash-checks
+    * against q54's plain SQL. */
   def q88BatchIvfSq(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
     val (indexed, cents) = SimilaritySearch.ivfBuildKMeans(e, "vec_id",
       "embedding", nCells = 8)
     val model = ScalarQuantization.sqTrain(e, "embedding")
-    val encoded = ScalarQuantization.sqEncode(indexed, "embedding", model)
+    val encoded = SimilaritySearch.encode(indexed, "embedding", model)
       .select(col("vec_id"), col("cell"), col("sq_code"))
-    SimilaritySearch.knnJoinIvfSq(e.filter(col("vec_id") < 5), encoded,
+    SimilaritySearch.knnJoinIvfQuantized(e.filter(col("vec_id") < 5), encoded,
         cents, model, "vec_id", "vec_id", "embedding", k = 3, nProbe = 8,
         refine = 2, exactSource = Some((e, "embedding")))
       .select(col("query_id"), col("vec_id"), col("score"),
@@ -884,33 +886,33 @@ object GraftQueries {
           .as("n_tokens")),
       idCol = "doc_id", weightCol = "n_tokens", budget = 2048L)
 
-  /** SQ8 scalar-quantized search ([[ScalarQuantization.sqSearch]]): the
-    * 4x-compressed middle point between raw-float exact scan and PQ's
-    * 16-byte codes. One-pass min/max train, codegen byte-grid encode,
-    * fused-multiply-add ADC scan, shallow exact re-rank. SQ8's distortion
-    * is low enough that refine=2 already recovers the exact top-k
-    * (spec-verified), so the whole path hash-checks against q11's plain
-    * SQL — the q44/q51 construction at a quarter of the refine depth. */
+  /** SQ8 scalar-quantized search ([[SimilaritySearch.quantizedSearch]] with an
+    * SQ8 model): the 4x-compressed middle point between raw-float exact scan
+    * and PQ's 16-byte codes. One-pass min/max train, codegen byte-grid encode,
+    * fused-multiply-add ADC scan, shallow exact re-rank. SQ8's distortion is
+    * low enough that refine=2 already recovers the exact top-k (spec-verified),
+    * so the whole path hash-checks against q11's plain SQL — the q44/q51
+    * construction at a quarter of the refine depth. */
   def q59SqTopk(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
     val qv = e.filter(col("vec_id") === 0).select(col("embedding"))
       .head().getSeq[Float](0).toArray
     val model = ScalarQuantization.sqTrain(e, "embedding")
-    val encoded = ScalarQuantization.sqEncode(e, "embedding", model)
+    val encoded = SimilaritySearch.encode(e, "embedding", model)
       .select(col("vec_id"), col("sq_code"))
-    ScalarQuantization.sqSearch(encoded, model, "vec_id", qv, k = 10,
+    SimilaritySearch.quantizedSearch(encoded, model, "vec_id", qv, k = 10,
         refine = 2, exactSource = Some((e, "embedding")))
       .select(col("vec_id"), col("score"))
   }
 
-  /** IVF-SQ composed search ([[ScalarQuantization.ivfSqSearch]]): IVF cell
-    * pruning feeding the SQ8 FMA scan — the scalar sibling of q51's
-    * IVFADC, closing the quantization matrix (IVF, SQ8, PQ, IVFADC,
+  /** IVF-SQ composed search ([[SimilaritySearch.ivfQuantizedSearch]] with an
+    * SQ8 model): IVF cell pruning feeding the SQ8 FMA scan — the scalar sibling
+    * of q51's IVFADC, closing the quantization matrix (IVF, SQ8, PQ, IVFADC,
     * IVF-SQ). Dim bytes per scanned row instead of PQ's m, but the
-    * near-lossless grid needs only refine=2 where PQ needs 16, so the
-    * refine stage reads 8x fewer raw vectors. Full probe + default refine
-    * provably equals exact top-k (spec-verified), so the composition
-    * hash-checks against q11's plain SQL like q51/q59. */
+    * near-lossless grid needs only refine=2 where PQ needs 16, so the refine
+    * stage reads 8x fewer raw vectors. Full probe + default refine provably
+    * equals exact top-k (spec-verified), so the composition hash-checks against
+    * q11's plain SQL like q51/q59. */
   def q87IvfSqTopk(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
     val qv = e.filter(col("vec_id") === 0).select(col("embedding"))
@@ -918,9 +920,9 @@ object GraftQueries {
     val (indexed, cents) = SimilaritySearch.ivfBuildKMeans(e, "vec_id",
       "embedding", nCells = 8)
     val model = ScalarQuantization.sqTrain(e, "embedding")
-    val encoded = ScalarQuantization.sqEncode(indexed, "embedding", model)
+    val encoded = SimilaritySearch.encode(indexed, "embedding", model)
       .select(col("vec_id"), col("cell"), col("sq_code"))
-    ScalarQuantization.ivfSqSearch(encoded, cents, model, "vec_id", qv,
+    SimilaritySearch.ivfQuantizedSearch(encoded, cents, model, "vec_id", qv,
         k = 10, nProbe = 8, refine = 2, exactSource = Some((e, "embedding")))
       .select(col("vec_id"), col("score"))
   }
@@ -2234,7 +2236,7 @@ object GraftQueries {
   def q89StreamRetrieval(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val e = t(spark, dir, "embeddings")
-    val (indexed, cents) = SimilaritySearch.ivfBuild(e, "vec_id",
+    val (indexed, cents) = SimilaritySearch.ivfBuildKMeans(e, "vec_id",
       "embedding", nCells = 4)
     val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
     val qs = spark.readStream.schema(schema)

@@ -72,17 +72,70 @@ class VectorIndexSpec extends SparkSpec {
     idx.search(qv5, k = 1).collect().head.getLong(0) shouldBe 5L
   }
 
-  test("searchApprox (LSH) reaches recall >= 0.9 vs exact at k=5") {
-    val idx = VectorIndex.build(src, "spec-lsh", "vec_id", "embedding",
-      withLsh = true)
-    val queries = src.filter(col("vec_id") < 20).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    val hits = queries.map { case (_, qv) =>
-      val exact = idx.search(qv, k = 5).collect().map(_.getLong(0)).toSet
-      val approx = idx.searchApprox(qv, k = 5).collect().map(_.getLong(0)).toSet
-      (exact intersect approx).size.toDouble / 5.0
+  test("refresh on an unversioned source keeps null-_deleted rows, like " +
+      "build and upsert") {
+    // pk 1: tombstone flag null (live); pk 2: tombstoned; the rest false
+    val flagged = src.withColumn(VectorIndex.DeletedCol,
+      when(col("vec_id") === 1, lit(null).cast("boolean"))
+        .otherwise(col("vec_id") === 2))
+    val idx = VectorIndex.build(flagged, "spec-null-del", "vec_id",
+      "embedding")
+    idx.size shouldBe 499
+    val qv1 = src.filter(col("vec_id") === 1).head().getSeq[Float](1).toArray
+    idx.refresh(flagged)
+    idx.size shouldBe 499
+    idx.search(qv1, k = 1).collect().head.getLong(0) shouldBe 1L
+  }
+
+  test("build on an empty versioned source: explicit dim, watermark 0, " +
+      "refresh picks the appended rows up") {
+    val versioned = src.withColumn("version", lit(1L))
+    val empty = versioned.filter(lit(false))
+    // dim cannot be derived from zero rows — a pointed failure, not a
+    // NoSuchElementException from head()
+    val err = the[IllegalArgumentException] thrownBy
+      VectorIndex.build(empty, "spec-empty-nodim", "vec_id", "embedding")
+    err.getMessage should include("dim")
+    val idx = VectorIndex.build(empty, "spec-empty", "vec_id", "embedding",
+      dim = 64)
+    idx.size shouldBe 0
+    idx.currentVersion shouldBe 0L
+    idx.refresh(empty) // still nothing new: the watermark stays
+    idx.currentVersion shouldBe 0L
+    idx.refresh(versioned)
+    idx.currentVersion shouldBe 1L
+    idx.size shouldBe 500
+    val qv3 = src.filter(col("vec_id") === 3).head().getSeq[Float](1).toArray
+    idx.search(qv3, k = 1).collect().head.getLong(0) shouldBe 3L
+  }
+
+  test("one quantizer slot: buildSq after buildPq leaves one code column " +
+      "and answers at SQ's certified depth") {
+    val idx = VectorIndex.build(src, "spec-requant", "vec_id", "embedding")
+      .buildPq(m = 16, ksub = 32)
+      .buildSq()
+    val qv = src.filter(col("vec_id") === 3).head().getSeq[Float](1).toArray
+    val dir = java.nio.file.Files.createTempDirectory("graft-requant").toString
+    idx.save(dir)
+    val stateCols = spark.read.parquet(s"$dir/state").columns
+    stateCols should contain("sq_code")
+    (stateCols should not).contain("pq_code")
+    new java.io.File(s"$dir/pq").exists() shouldBe false
+    // refine = -1 resolves to the SQ depth: the ADC stage keeps k * 2
+    // candidates, not PQ's k * 16
+    val got = idx.searchQuantized(qv, k = 5)
+    val adcLimits = got.queryExecution.sparkPlan.collect {
+      case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+          if t.sortOrder.exists(_.child.references.exists(
+            _.name == "adc_score")) => t.limit
     }
-    (hits.sum / hits.length) should be >= 0.9
+    adcLimits shouldBe Seq(5 * graft.ops.SimilaritySearch.SqRefineCertified)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(r.length - 1))).toSeq
+    rows(got) shouldBe rows(idx.search(qv, k = 5))
+    // the reloaded index restores the SQ model, not a PQ one
+    rows(VectorIndex.load(spark, dir, "spec-requant-re", "vec_id", "embedding")
+      .searchQuantized(qv, k = 5)) shouldBe rows(got)
   }
 
   test("dataArray positional parity with the reference result shape (NB:416)") {
@@ -134,7 +187,7 @@ class VectorIndexSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     val qv = all(3L)
     val exact = idx.search(qv, k = 5).collect().map(_.getLong(0)).toSeq
-    val pq = idx.searchPq(qv, k = 5, refine = 16)
+    val pq = idx.searchQuantized(qv, k = 5, refine = 16)
     pq.collect().map(_.getLong(0)).toSeq shouldBe exact
     // internal code column never projected
     (pq.columns should not).contain("pq_code")
@@ -143,15 +196,15 @@ class VectorIndexSpec extends SparkSpec {
     // pk tie-break puts 3 before the new id
     idx.upsert(src.filter(col("vec_id") === 3)
       .withColumn("vec_id", lit(999999L)))
-    idx.searchPq(qv, k = 2, refine = 16).collect()
+    idx.searchQuantized(qv, k = 2, refine = 16).collect()
       .map(_.getLong(0)).toSeq shouldBe Seq(3L, 999999L)
     // durability: reload must answer identically (codebooks persisted)
     val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
     idx.save(dir)
     val re = VectorIndex.load(spark, dir, "spec-pq-re", "vec_id", "embedding")
-    re.searchPq(qv, k = 5, refine = 4).collect()
+    re.searchQuantized(qv, k = 5, refine = 4).collect()
       .map(r => (r.getLong(0), r.getDouble(r.length - 1))).toSeq shouldBe
-      idx.searchPq(qv, k = 5, refine = 4).collect()
+      idx.searchQuantized(qv, k = 5, refine = 4).collect()
         .map(r => (r.getLong(0), r.getDouble(r.length - 1))).toSeq
   }
 
@@ -164,7 +217,7 @@ class VectorIndexSpec extends SparkSpec {
     val qv = all(3L)
     val exact = idx.search(qv, k = 5).collect()
       .map(r => (r.getLong(0), r.getDouble(r.length - 1))).toSeq
-    val sq = idx.searchSq(qv, k = 5, refine = 2)
+    val sq = idx.searchQuantized(qv, k = 5, refine = 2)
     sq.collect()
       .map(r => (r.getLong(0), r.getDouble(r.length - 1))).toSeq shouldBe exact
     // internal code column never projected
@@ -174,19 +227,19 @@ class VectorIndexSpec extends SparkSpec {
     // pk tie-break puts 3 before the new id
     idx.upsert(src.filter(col("vec_id") === 3)
       .withColumn("vec_id", lit(999999L)))
-    idx.searchSq(qv, k = 2, refine = 4).collect()
+    idx.searchQuantized(qv, k = 2, refine = 4).collect()
       .map(_.getLong(0)).toSeq shouldBe Seq(3L, 999999L)
     // durability: reload must answer identically (grid persisted)
     val dir = java.nio.file.Files.createTempDirectory("graft-sq").toString
     idx.save(dir)
     val re = VectorIndex.load(spark, dir, "spec-sq-re", "vec_id", "embedding")
-    re.searchSq(qv, k = 5, refine = 2).collect()
+    re.searchQuantized(qv, k = 5, refine = 2).collect()
       .map(r => (r.getLong(0), r.getDouble(r.length - 1))).toSeq shouldBe
-      idx.searchSq(qv, k = 5, refine = 2).collect()
+      idx.searchQuantized(qv, k = 5, refine = 2).collect()
         .map(r => (r.getLong(0), r.getDouble(r.length - 1))).toSeq
     // no layout -> clear error, not a wrong answer
     val bare = VectorIndex.build(src, "spec-sq-bare", "vec_id", "embedding")
-    an[IllegalStateException] should be thrownBy bare.searchSq(qv, k = 5)
+    an[IllegalStateException] should be thrownBy bare.searchQuantized(qv, k = 5)
   }
 
   test("IVFADC behind the index handle: full probe + deep refine == exact, " +
@@ -201,10 +254,10 @@ class VectorIndexSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getDouble(r.length - 1))).toSeq
     // full probe + deep refine: the composed path EQUALS exact search,
     // scores included (the refine stage re-scores on raw vectors)
-    idx.searchIvfPq(qv, k = 5, nProbe = 8, refine = 16).collect()
+    idx.searchIvfQuantized(qv, k = 5, nProbe = 8, refine = 16).collect()
       .map(r => (r.getLong(0), r.getDouble(r.length - 1))).toSeq shouldBe exact
     // pruned probe returns k rows; neither internal column projected
-    val pruned = idx.searchIvfPq(qv, k = 5, nProbe = 2, refine = 8)
+    val pruned = idx.searchIvfQuantized(qv, k = 5, nProbe = 2, refine = 8)
     pruned.count() shouldBe 5
     (pruned.columns should not).contain("cell")
     (pruned.columns should not).contain("pq_code")
@@ -214,23 +267,23 @@ class VectorIndexSpec extends SparkSpec {
     // through the composed path (tie at 1.0, pk tie-break)
     idx.upsert(src.filter(col("vec_id") === 3)
       .withColumn("vec_id", lit(999999L)))
-    idx.searchIvfPq(qv, k = 2, nProbe = 8, refine = 16).collect()
+    idx.searchIvfQuantized(qv, k = 2, nProbe = 8, refine = 16).collect()
       .map(_.getLong(0)).toSeq shouldBe Seq(3L, 999999L)
     // durability: centroids + codebooks both persist, reload answers
     // identically
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
     idx.save(dir)
     val re = VectorIndex.load(spark, dir, "spec-ivfpq-re", "vec_id", "embedding")
-    re.searchIvfPq(qv, k = 5, nProbe = 2, refine = 8).collect()
+    re.searchIvfQuantized(qv, k = 5, nProbe = 2, refine = 8).collect()
       .map(r => (r.getLong(0), r.getDouble(r.length - 1))).toSeq shouldBe
-      idx.searchIvfPq(qv, k = 5, nProbe = 2, refine = 8).collect()
+      idx.searchIvfQuantized(qv, k = 5, nProbe = 2, refine = 8).collect()
         .map(r => (r.getLong(0), r.getDouble(r.length - 1))).toSeq
     // missing either layout -> clear error, not a wrong answer
     val bare = VectorIndex.build(src, "spec-ivfpq-bare", "vec_id", "embedding")
     an[IllegalStateException] should be thrownBy
-      bare.searchIvfPq(qv, k = 5)
+      bare.searchIvfQuantized(qv, k = 5)
     an[IllegalStateException] should be thrownBy
-      bare.buildIvf(nCells = 4).searchIvfPq(qv, k = 5)
+      bare.buildIvf(nCells = 4).searchIvfQuantized(qv, k = 5)
   }
 
   test("queryType=HYBRID on the index == HybridSearch.search (NB:386-387)") {

@@ -31,7 +31,7 @@ class PqSpec extends SparkSpec {
       yield ((i * 4 + j).toLong, (books(0)(i) ++ books(1)(j)).toSeq)
     val df = rows.toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-    val encoded = SimilaritySearch.pqEncode(df, "embedding", model)
+    val encoded = SimilaritySearch.encode(df, "embedding", model)
     // codes recover the construction indices
     encoded.collect().foreach { r =>
       val id = r.getAs[Long]("vec_id")
@@ -53,7 +53,7 @@ class PqSpec extends SparkSpec {
   test("codes are M bytes: 16x smaller than the raw 64-dim float vector") {
     val model = SimilaritySearch.pqTrain(emb, "embedding", m = 16, ksub = 32)
     model.dim shouldBe 64
-    val encoded = SimilaritySearch.pqEncode(emb, "embedding", model)
+    val encoded = SimilaritySearch.encode(emb, "embedding", model)
     encoded.schema("pq_code").dataType shouldBe
       org.apache.spark.sql.types.BinaryType
     encoded.select("pq_code").collect()
@@ -62,12 +62,12 @@ class PqSpec extends SparkSpec {
 
   test("ADC-only recall@10 on the fixture clears the floor; refine recovers exact") {
     val model = SimilaritySearch.pqTrain(emb, "embedding", m = 16, ksub = 32)
-    val encoded = SimilaritySearch.pqEncode(emb, "embedding", model)
+    val encoded = SimilaritySearch.encode(emb, "embedding", model)
       .select(col("vec_id"), col("pq_code"))    // codes only — no vectors
     for (qid <- Seq(0L, 7L, 101L)) {
       val qv = queryVec(qid)
       val exact = exactTopIds(qv, 10)
-      val adcOnly = SimilaritySearch.pqSearch(encoded, model, "vec_id",
+      val adcOnly = SimilaritySearch.quantizedSearch(encoded, model, "vec_id",
         qv, k = 10).collect().map(_.getAs[Long]("vec_id")).toSet
       // ADC-only recall is config- and query-dependent (16 B of code for a
       // 256 B near-random vector); the sanity floor just separates it from
@@ -76,7 +76,7 @@ class PqSpec extends SparkSpec {
       val recall = exact.count(adcOnly.contains) / 10.0
       withClue(s"query $qid adc-only recall: ") { recall should be >= 0.2 }
       // two-stage: ADC candidates -> exact re-rank == exact top-k
-      val refined = SimilaritySearch.pqSearch(encoded, model, "vec_id",
+      val refined = SimilaritySearch.quantizedSearch(encoded, model, "vec_id",
           qv, k = 10, refine = 16, exactSource = Some((emb, "embedding")))
         .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("score")))
       withClue(s"query $qid refined: ") {
@@ -102,7 +102,7 @@ class PqSpec extends SparkSpec {
     model.dim shouldBe 7
     model.codebooks(0)(0).length + model.codebooks(1)(0).length shouldBe 7
     // with ksub = corpus size, every vector is its own codeword: lossless
-    val enc = SimilaritySearch.pqEncode(df, "embedding", model)
+    val enc = SimilaritySearch.encode(df, "embedding", model)
     val q = Array(1f, 1f, 1f, 1f, 1f, 1f, 1f)
     val lut = model.lut(q)
     enc.collect().foreach { r =>
@@ -119,7 +119,7 @@ class PqSpec extends SparkSpec {
     val rows = emb.limit(50).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getSeq[Float](1)))
     // interpreted mirror: call the shared helpers directly on copied data
-    val viaDf = SimilaritySearch.pqEncode(emb.limit(50), "embedding", model)
+    val viaDf = SimilaritySearch.encode(emb.limit(50), "embedding", model)
       .withColumn("adc",
         graft.expressions.VectorExpressions.pqAdcDot(col("pq_code"), lut))
       .collect()
@@ -142,7 +142,7 @@ class PqSpec extends SparkSpec {
     val model = SimilaritySearch.pqTrain(emb, "embedding", m = 8, ksub = 16)
     val qids = Seq(0L, 3L, 7L)
     val luts = qids.map(q => model.lut(queryVec(q))).toArray
-    val encoded = SimilaritySearch.pqEncode(emb.limit(40), "embedding", model)
+    val encoded = SimilaritySearch.encode(emb.limit(40), "embedding", model)
       .select(col("vec_id"), col("pq_code"))
     // every (row, query) pair through the multi expression in one pass
     val multi = encoded

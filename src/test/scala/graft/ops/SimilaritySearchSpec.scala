@@ -104,8 +104,8 @@ class SimilaritySearchSpec extends SparkSpec {
   }
 
   test("IVF: cells partition the corpus; probe recall reasonable") {
-    val (indexed, cents) = SimilaritySearch.ivfBuild(emb, "vec_id", "embedding",
-      nCells = 8)
+    val (indexed, cents) = SimilaritySearch.ivfBuildKMeans(emb, "vec_id",
+      "embedding", nCells = 8)
     indexed.count() shouldBe emb.count() // assignment is total
     cents.length shouldBe 8
     val qv = all(0L)
@@ -124,7 +124,7 @@ class SimilaritySearchSpec extends SparkSpec {
   test("maxSimSearch: full probe == exact doc-level group-max; partial " +
       "probe keeps the self-match doc; VectorIndex API guards layout") {
     import org.apache.spark.sql.functions._
-    val (indexed, cents) = SimilaritySearch.ivfBuild(emb, "vec_id",
+    val (indexed, cents) = SimilaritySearch.ivfBuildKMeans(emb, "vec_id",
       "embedding", nCells = 8)
     val qv = all(0L)
     // exact MaxSim ground truth: dot every chunk, max per doc (label),
@@ -205,7 +205,7 @@ class SimilaritySearchSpec extends SparkSpec {
     val (indexed, cents) = SimilaritySearch.ivfBuildKMeans(emb, "vec_id",
       "embedding", nCells = 8)
     val model = SimilaritySearch.pqTrain(emb, "embedding", m = 16, ksub = 32)
-    val encoded = SimilaritySearch.pqEncode(indexed, "embedding", model)
+    val encoded = SimilaritySearch.encode(indexed, "embedding", model)
       .select(col("vec_id"), col("cell"), col("pq_code"))
     val queries = emb.filter(col("vec_id") < 16)
     def tuples(df: org.apache.spark.sql.DataFrame) = df
@@ -219,11 +219,11 @@ class SimilaritySearchSpec extends SparkSpec {
     // routing prunes nothing at full probe; refine deep enough to recover
     // the exact top-10 per query, scores re-computed on raw vectors so the
     // tuples match bit for bit
-    tuples(SimilaritySearch.knnJoinIvfPq(queries, encoded, cents, model,
+    tuples(SimilaritySearch.knnJoinIvfQuantized(queries, encoded, cents, model,
       "vec_id", "vec_id", "embedding", k = 10, nProbe = 8, refine = 48,
       exactSource = Some((emb, "embedding")))) shouldBe exact
     // ADC-only: approximate scores, but shape + per-query cardinality hold
-    val adcOnly = SimilaritySearch.knnJoinIvfPq(queries, encoded, cents,
+    val adcOnly = SimilaritySearch.knnJoinIvfQuantized(queries, encoded, cents,
       model, "vec_id", "vec_id", "embedding", k = 10, nProbe = 8)
     adcOnly.collect().map(_.getAs[Long]("query_id"))
       .groupBy(identity).values.foreach(_.length shouldBe 10)
@@ -243,7 +243,7 @@ class SimilaritySearchSpec extends SparkSpec {
     }.flatten shouldBe empty
     // empty batch: empty result, still the right schema — no driver-side
     // materialization means nothing to reject
-    SimilaritySearch.knnJoinIvfPq(emb.filter(col("vec_id") < 0), encoded,
+    SimilaritySearch.knnJoinIvfQuantized(emb.filter(col("vec_id") < 0), encoded,
       cents, model, "vec_id", "vec_id", "embedding", k = 5)
       .count() shouldBe 0L
   }
@@ -253,7 +253,7 @@ class SimilaritySearchSpec extends SparkSpec {
     val (indexed, cents) = SimilaritySearch.ivfBuildKMeans(emb, "vec_id",
       "embedding", nCells = 8)
     val model = ScalarQuantization.sqTrain(emb, "embedding")
-    val encoded = ScalarQuantization.sqEncode(indexed, "embedding", model)
+    val encoded = SimilaritySearch.encode(indexed, "embedding", model)
       .select(col("vec_id"), col("cell"), col("sq_code"))
     val queries = emb.filter(col("vec_id") < 16)
     def tuples(df: org.apache.spark.sql.DataFrame) = df
@@ -266,11 +266,11 @@ class SimilaritySearchSpec extends SparkSpec {
       "vec_id", "embedding", k = 10))
     // the near-lossless grid needs only the SQ default refine=2 where the
     // PQ twin above needs 48 — that asymmetry IS the operator's point
-    tuples(SimilaritySearch.knnJoinIvfSq(queries, encoded, cents, model,
+    tuples(SimilaritySearch.knnJoinIvfQuantized(queries, encoded, cents, model,
       "vec_id", "vec_id", "embedding", k = 10, nProbe = 8,
       exactSource = Some((emb, "embedding")))) shouldBe exact
     // ADC-only shape + per-query cardinality
-    val adcOnly = SimilaritySearch.knnJoinIvfSq(queries, encoded, cents,
+    val adcOnly = SimilaritySearch.knnJoinIvfQuantized(queries, encoded, cents,
       model, "vec_id", "vec_id", "embedding", k = 10, nProbe = 8)
     adcOnly.collect().map(_.getAs[Long]("query_id"))
       .groupBy(identity).values.foreach(_.length shouldBe 10)
@@ -284,14 +284,14 @@ class SimilaritySearchSpec extends SparkSpec {
     // driver-side model math they must reproduce bit for bit
     val qv = all(3L)
     val (scaled, bias) = model.queryFactors(qv)
-    val viaExprs = ScalarQuantization.sqEncode(emb, "embedding", model)
+    val viaExprs = SimilaritySearch.encode(emb, "embedding", model)
       .filter(col("vec_id") === 42L)
       .select(graft.expressions.VectorExpressions.sqAdcDotLut(
         col("sq_code"), graft.expressions.VectorExpressions.sqFactors(
           graft.functions.VectorFunctions.vecLit(qv).cast("array<float>"),
           model.mins, model.steps)).as("s"))
       .head().getDouble(0)
-    val code = ScalarQuantization.sqEncode(emb, "embedding", model)
+    val code = SimilaritySearch.encode(emb, "embedding", model)
       .filter(col("vec_id") === 42L).select("sq_code")
       .head().getAs[Array[Byte]](0)
     viaExprs shouldBe graft.expressions.SqAdcDot.score(code, scaled, bias)
@@ -300,7 +300,7 @@ class SimilaritySearchSpec extends SparkSpec {
       graft.expressions.SqAdcDotLut.score(code,
         new org.apache.spark.sql.catalyst.util.GenericArrayData(
           new Array[Double](code.length))) // dim, not dim+1
-    SimilaritySearch.knnJoinIvfSq(emb.filter(col("vec_id") < 0), encoded,
+    SimilaritySearch.knnJoinIvfQuantized(emb.filter(col("vec_id") < 0), encoded,
       cents, model, "vec_id", "vec_id", "embedding", k = 5)
       .count() shouldBe 0L
   }

@@ -15,7 +15,7 @@ class SqSpec extends SparkSpec {
 
   test("reconstruction error is bounded by step/2 per dimension") {
     val model = ScalarQuantization.sqTrain(emb, "embedding")
-    val rows = ScalarQuantization.sqEncode(emb, "embedding", model)
+    val rows = SimilaritySearch.encode(emb, "embedding", model)
       .select("embedding", "sq_code").collect()
     rows.foreach { r =>
       val v = r.getSeq[Float](0)
@@ -35,7 +35,7 @@ class SqSpec extends SparkSpec {
       .select($"id", $"v".cast("array<float>").as("v"))
     val model = ScalarQuantization.sqTrain(df, "v")
     model.mins.toSeq shouldBe Seq(-3f, -2f)
-    val codes = ScalarQuantization.sqEncode(df, "v", model)
+    val codes = SimilaritySearch.encode(df, "v", model)
       .select("id", "sq_code")
       .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
     (codes(1L)(0) & 0xff) shouldBe 0     // min of dim 0
@@ -50,7 +50,7 @@ class SqSpec extends SparkSpec {
       .toDF("id", "v").select($"id", $"v".cast("array<float>").as("v"))
     val model = ScalarQuantization.sqTrain(df, "v")
     model.steps(0) shouldBe 0f
-    val encoded = ScalarQuantization.sqEncode(df, "v", model)
+    val encoded = SimilaritySearch.encode(df, "v", model)
       .select("id", "sq_code")
     encoded.collect().foreach { r =>
       val code = r.getAs[Array[Byte]](1)
@@ -63,7 +63,7 @@ class SqSpec extends SparkSpec {
     val model = ScalarQuantization.sqTrain(emb, "embedding")
     val qv = queryVec(0L)
     val (scaled, bias) = model.queryFactors(qv)
-    val rows = ScalarQuantization.sqEncode(emb, "embedding", model)
+    val rows = SimilaritySearch.encode(emb, "embedding", model)
       // the wide projection keeps the expression inside whole-stage codegen
       .withColumn("adc", graft.expressions.VectorExpressions
         .sqAdcDot(col("sq_code"), scaled, bias))
@@ -83,14 +83,14 @@ class SqSpec extends SparkSpec {
 
   test("two-stage SQ search equals exact top-k at refine=2 on the fixture") {
     val model = ScalarQuantization.sqTrain(emb, "embedding")
-    val encoded = ScalarQuantization.sqEncode(emb, "embedding", model)
+    val encoded = SimilaritySearch.encode(emb, "embedding", model)
       .select(col("vec_id"), col("sq_code"))   // codes only — no vectors
     for (qid <- Seq(0L, 7L, 101L)) {
       val qv = queryVec(qid)
       val exact = SimilaritySearch.topK(emb, "vec_id", "embedding", qv, 10)
         .collect().map(r => (r.getAs[Long]("vec_id"),
           r.getAs[Double]("score")))
-      val sq = ScalarQuantization.sqSearch(encoded, model, "vec_id", qv,
+      val sq = SimilaritySearch.quantizedSearch(encoded, model, "vec_id", qv,
           k = 10, refine = 2, exactSource = Some((emb, "embedding")))
         .select("vec_id", "score")
         .collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -102,13 +102,13 @@ class SqSpec extends SparkSpec {
     // SQ8's point on the curve: unlike PQ's 0.2-floor, the byte grid keeps
     // the ranking — this is why refine=2 suffices where PQ needs 16
     val model = ScalarQuantization.sqTrain(emb, "embedding")
-    val encoded = ScalarQuantization.sqEncode(emb, "embedding", model)
+    val encoded = SimilaritySearch.encode(emb, "embedding", model)
       .select(col("vec_id"), col("sq_code"))
     for (qid <- Seq(0L, 7L, 101L)) {
       val qv = queryVec(qid)
       val exact = SimilaritySearch.topK(emb, "vec_id", "embedding", qv, 10)
         .collect().map(_.getAs[Long]("vec_id")).toSet
-      val adcOnly = ScalarQuantization.sqSearch(encoded, model, "vec_id",
+      val adcOnly = SimilaritySearch.quantizedSearch(encoded, model, "vec_id",
           qv, k = 10).collect().map(_.getAs[Long]("vec_id")).toSet
       (exact.count(adcOnly.contains) / 10.0) should be >= 0.9
     }
@@ -116,16 +116,16 @@ class SqSpec extends SparkSpec {
 
   test("IVF-SQ: full probe + refine=2 equals exact; pruned probe stays " +
       "inside the probed cells") {
-    val (indexed, cents) = SimilaritySearch.ivfBuild(emb, "vec_id",
+    val (indexed, cents) = SimilaritySearch.ivfBuildKMeans(emb, "vec_id",
       "embedding", nCells = 4)
     val model = ScalarQuantization.sqTrain(emb, "embedding")
-    val encoded = ScalarQuantization.sqEncode(indexed, "embedding", model)
+    val encoded = SimilaritySearch.encode(indexed, "embedding", model)
       .select(col("vec_id"), col("cell"), col("sq_code"))
     for (qid <- Seq(0L, 7L, 101L)) {
       val qv = queryVec(qid)
       val exact = SimilaritySearch.topK(emb, "vec_id", "embedding", qv, 10)
         .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("score")))
-      val full = ScalarQuantization.ivfSqSearch(encoded, cents, model,
+      val full = SimilaritySearch.ivfQuantizedSearch(encoded, cents, model,
           "vec_id", qv, k = 10, nProbe = 4,
           exactSource = Some((emb, "embedding")))
         .select("vec_id", "score")
@@ -138,7 +138,7 @@ class SqSpec extends SparkSpec {
       graft.functions.VectorFunctions.dot(qv, cents(i)))
     val cellIds = encoded.filter(col("cell") === probeCell)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val pruned = ScalarQuantization.ivfSqSearch(encoded, cents, model,
+    val pruned = SimilaritySearch.ivfQuantizedSearch(encoded, cents, model,
         "vec_id", qv, k = 10, nProbe = 1,
         exactSource = Some((emb, "embedding")))
       .select("vec_id").collect().map(_.getLong(0))
@@ -151,15 +151,15 @@ class SqSpec extends SparkSpec {
     val idx = graft.index.VectorIndex
       .build(emb, "sq-ivf-spec", "vec_id", "embedding")
     val qv = queryVec(7L)
-    an[IllegalStateException] should be thrownBy idx.searchIvfSq(qv)
+    an[IllegalStateException] should be thrownBy idx.searchIvfQuantized(qv)
     idx.buildIvf(nCells = 4)
-    an[IllegalStateException] should be thrownBy idx.searchIvfSq(qv)
+    an[IllegalStateException] should be thrownBy idx.searchIvfQuantized(qv)
     idx.buildSq().save(dir)
     val re = graft.index.VectorIndex.load(spark, dir, "sq-ivf-spec-re",
       "vec_id", "embedding")
     val exact = idx.search(qv, k = 5).select("vec_id", "score")
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val got = re.searchIvfSq(qv, k = 5, nProbe = 4)
+    val got = re.searchIvfQuantized(qv, k = 5, nProbe = 4)
       .select("vec_id", "score")
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     got.toSeq shouldBe exact.toSeq

@@ -137,7 +137,7 @@ class PlanShapeSpec extends SparkSpec {
       "vec_id", "embedding")
     val qv = emb.orderBy("vec_id").select("embedding")
       .head().getSeq[Float](0).toArray
-    val plan = idx.searchIvfPq(qv, k = 5, nProbe = 2, refine = 4)
+    val plan = idx.searchIvfQuantized(qv, k = 5, nProbe = 2, refine = 4)
       .queryExecution.sparkPlan
     // stage 2 (ADC): TakeOrderedAndProject over adc_score whose entire
     // subtree projects (pk, cell, pq_code) from the materialized state —
@@ -177,7 +177,7 @@ class PlanShapeSpec extends SparkSpec {
     spark.sqlContext.clearCache()
     val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
     val (indexed, cents) = graft.ops.SimilaritySearch
-      .ivfBuild(emb, "vec_id", "embedding", nCells = 4)
+      .ivfBuildKMeans(emb, "vec_id", "embedding", nCells = 4)
     import org.apache.spark.sql.functions._
     def cellJoins(df: DataFrame) = df.queryExecution.sparkPlan.collect {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec

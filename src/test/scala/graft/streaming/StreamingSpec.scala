@@ -80,7 +80,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val emb = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
     val (indexed, cents) = graft.ops.SimilaritySearch
-      .ivfBuild(emb, "vec_id", "embedding", nCells = 4)
+      .ivfBuildKMeans(emb, "vec_id", "embedding", nCells = 4)
     val queries = emb.filter(col("vec_id") < 6)
       .select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
